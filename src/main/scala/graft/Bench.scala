@@ -31,9 +31,9 @@ object Bench {
         .getOrCreate()
       s.sparkContext.setLogLevel("ERROR")
       // SPARK_GRAFT_CONF=k=v[,k=v] — session-conf overrides for focused
-      // measurement runs (e.g. spark.graft.bm25.planCap=0 forces the
-      // distributed WAND planning branch so the 100 TB serving path gets
-      // its own timing row in bench/SCALING.md)
+      // measurement runs (e.g. spark.sql.adaptive.enabled=false or
+      // spark.sql.autoBroadcastJoinThreshold=-1 to time a query with
+      // AQE or broadcast joins off)
       sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty)
         .foreach { kv =>
           val i = kv.indexOf('=')
@@ -501,10 +501,7 @@ object Bench {
       // wall (JIT + the global codegen class cache survive) and
       // provably zeroes the block store — cheap insurance against
       // charging one query's residue to every query after it.
-      // env-tunable for protocol experiments (GRAFT_BENCH_RESTART_MB=1
-      // forces a rebuild after every query; huge disables)
-      val restartMb = sys.env.get("GRAFT_BENCH_RESTART_MB")
-        .map(_.toLong).getOrElse(384L)
+      val restartMb = 384L
       if (blkUsedMb > restartMb) {
         restarts += 1
         System.err.println(s"[bench] session restart #$restarts " +

@@ -413,7 +413,7 @@ object Bpe {
     // object docstring). When the vocabulary fits a driver cap, the
     // k-rank argmax/replace loop runs in plain Scala over the
     // collected (spaced word, count) rows — the same size-gated
-    // driver fast path as Clusters' DSU and the BM25 planCap: the
+    // driver fast path as Clusters' DSU: the
     // distributed loop costs ~3 driver actions PER RANK (argmax
     // collect + checkpoint + changed-probe), ~72 scheduling
     // round-trips for k=24 over a 31-row table at sf0.1, where the

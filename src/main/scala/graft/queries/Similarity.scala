@@ -809,10 +809,8 @@ object Similarity {
     * arithmetic with no float-summation order to diverge.
     */
   private[queries] def bm25Scored(s: org.apache.spark.sql.SparkSession,
-      d: String, forceDense: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
-    val c = Ctx(s, d)
-    bm25ScoredOn(s, c.documents, forceDense)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    bm25ScoredOn(s, Ctx(s, d).documents)
 
   /** The Okapi BM25 contribution expression (k1 = 1.2, b = 0.75),
     * micro-unit-quantized — the ONE definition shared by the batch
@@ -935,6 +933,13 @@ object Similarity {
     * the unpruned probe (RetrievalSpec proves equality and strictly
     * fewer probed postings rows on a >64-vocab corpus).
     *
+    * Both phases are ONE lazy plan: the query-side geometry (ub order,
+    * suffix sums, seed pick, θ, the essential split) is query-keyed
+    * windows and a θ join, so building the frame submits no Spark job
+    * and the probe runs inside its consumer's single action — each
+    * partition prunes against its queries' shared θ (REPOSE's top-k
+    * shape). RetrievalSpec pins the zero-job build.
+    *
     * The two optional Observations meter the postings rows entering the
     * scoring stage (essential fan-out; candidate-restricted rest).
     */
@@ -947,135 +952,55 @@ object Similarity {
       essObs: Option[org.apache.spark.sql.Observation] = None,
       neObs: Option[org.apache.spark.sql.Observation] = None)
       : org.apache.spark.sql.DataFrame = {
-    val s = postings.sparkSession
-    import s.implicits._
     // θ = k-th best seed partial score per query, via the bounded
     // partial-aggregating TopK (rankTopK's aggregator) instead of a
     // row_number window: map tasks reduce to ≤k candidates per query
     // BEFORE the exchange and the full lb set is never sorted
     val topkAgg = udaf(new graft.functions.TopK(k),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-    val keyType = qt.schema(keyCol).dataType
     // ---- query-side PLANNING (sufx geometry, seed choice, θ floor,
-    // essential/non-essential split): bounded by the QUERY BATCH, never
-    // the corpus, so under a gated cap it runs driver-side — this is
-    // per-batch query planning, the work a serving engine does per
-    // query, and doing it in ~2 bounded collects instead of a chain of
-    // window/join stages removes ~20 stage round-trips per probe call
-    // (measured ~40% of xs7b's wall at sf0.1). Over the cap (huge query
-    // batches), the identical geometry computes distributedly below.
-    // conf-tunable so a spec can force the distributed branch
-    // (RetrievalSpec sets 0) without touching broadcast planning
-    val planCap = s.conf.get("spark.graft.bm25.planCap", "200000").toInt
-    // the driver path round-trips keys through long — non-integral
-    // query keys take the distributed branch unconditionally
-    val integralKey = keyType match {
-      case _: org.apache.spark.sql.types.LongType |
-           _: org.apache.spark.sql.types.IntegerType |
-           _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    // ONE planning collect (r16; was two serial driver round-trips —
-    // head fetch, then a theta job seeded from it — each re-scanning
-    // the cached postings/tf frames, measured ~4 s of xs7b's warm
-    // probe): the seed terms (the 2 highest-ub per query, the same
-    // (ub desc, term asc) order the driver sort used) now derive
-    // distributedly via a query-batch-sized window, θ joins back onto
-    // the term geometry, and the driver fetches (key, term, ub, θ) in
-    // a single collect. Identical values by construction — same seed
-    // choice, same θ aggregation, same suffix-sum split below. The
-    // seed broadcast is limit-bounded so an over-cap batch cannot
-    // build an unbounded broadcast: its truncated θ is discarded with
-    // the whole fetch when head.length > planCap trips the gate.
-    val head =
-      if (integralKey && planCap > 0) {
-        val qtu = qt.join(Scale.maybeBroadcast(ubs), "term")
-          .select(col(keyCol).cast("long").as(keyCol), col("term"),
-            col("ub").cast("long").as("ub"))
-        val wSeed = Window.partitionBy(keyCol)
-          .orderBy(col("ub").desc, col("term").asc)
-        val seed = qtu
-          .withColumn("pos", row_number().over(wSeed))
-          .filter(col("pos") <= 2)
-          .limit(2 * (planCap + 1))
-          .select(keyCol, "term")
-        val theta = postings.join(broadcast(seed), "term")
-          .groupBy(col(keyCol), col("doc_id")).agg(sum(col("cu")).as("lb"))
-          .groupBy(col(keyCol))
-          .agg(topkAgg(col("lb").cast("double"), col("doc_id")).as("top"))
-          .filter(size(col("top")) === k)
-          .select(col(keyCol),
-            element_at(col("top"), k).getField("score").cast("long").as("th"))
-        qtu.join(theta, Seq(keyCol), "left")
-          .select(col(keyCol), col("term"), col("ub"), col("th"))
-          .limit(planCap + 1).collect()
-      } else Array.empty[org.apache.spark.sql.Row]
-    val (essential, neTerms) = if (integralKey && planCap > 0 && head.length <= planCap) {
-      // tokens are ASCII ([a-z]+ tokenizer), so JVM string order ==
-      // Spark's UTF8 binary order and the (ub desc, term asc) tie-break
-      // matches the distributed fallback exactly
-      val sortedByQ: Map[Long, Array[(String, Long)]] = head
-        .groupBy(_.getLong(0))
-        .map { case (q, rows) =>
-          q -> rows.map(r => (r.getString(1), r.getLong(2)))
-            .sortBy { case (t, ub) => (-ub, t) }
-        }
-      val thetaMap: Map[Long, Long] = head.iterator
-        .filter(!_.isNullAt(3))
-        .map(r => r.getLong(0) -> r.getLong(3)).toMap
-      val essB = Seq.newBuilder[(Long, String, Long, Long)]
-      val neB = Seq.newBuilder[(Long, String)]
-      for ((q, ts) <- sortedByQ) {
-        val theta = thetaMap.getOrElse(q, 0L)
-        val suf = new Array[Long](ts.length)
-        var acc = 0L
-        for (i <- ts.indices.reverse) { acc += ts(i)._2; suf(i) = acc }
-        // suffix sums decrease down the ub order, so the FIRST
-        // non-essential sufx is the whole non-essential ub sum
-        val neSum = suf.find(_ < theta).getOrElse(0L)
-        for (i <- ts.indices)
-          if (suf(i) >= theta) essB += ((q, ts(i)._1, theta, neSum))
-          else neB += ((q, ts(i)._1))
-      }
-      (essB.result().toDF(keyCol, "term", "theta", "ne_sum")
-         .withColumn(keyCol, col(keyCol).cast(keyType)),
-       neB.result().toDF(keyCol, "term")
-         .withColumn(keyCol, col(keyCol).cast(keyType)))
-    } else {
-      val wq = Window.partitionBy(keyCol).orderBy(col("ub").desc, col("term").asc)
-      // query-batch-sized term geometry, persisted (lazily) so the seed
-      // broadcast and qmeta don't each re-run the ubs join + windows
-      val qts = own(qt.join(Scale.maybeBroadcast(ubs), "term")
-        .withColumn("sufx", sum(col("ub")).over(
-          wq.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-        .withColumn("pos", row_number().over(wq))
-        .persist())
-      val seed = qts.filter(col("pos") <= 2).select(keyCol, "term")
-      val theta = postings.join(Scale.maybeBroadcast(seed), "term")
-        .groupBy(keyCol, "doc_id").agg(sum(col("cu")).as("lb"))
-        .groupBy(keyCol).agg(topkAgg(col("lb").cast("double"), col("doc_id")).as("top"))
-        .filter(size(col("top")) === k)
-        .select(col(keyCol),
-          element_at(col("top"), k).getField("score").cast("long").as("theta"))
-      // lazy persist, NOT an eager checkpoint: both consumers still
-      // compute the floor scan once via the cache, but the whole probe
-      // stays ONE action, so AQE schedules the broadcast subplans
-      // concurrently instead of behind serial phase-boundary jobs
-      val qmeta = own(qts.join(theta, Seq(keyCol), "left")
-        .withColumn("theta", coalesce(col("theta"), lit(0L)))
-        // largest non-essential sufx == whole non-essential ub sum; a
-        // sort-free partition window rides it on every term row, so the
-        // probe needs no separate per-query bound frame (and no join)
-        .withColumn("ne_sum",
-          max(when(col("sufx") < col("theta"), col("sufx")).otherwise(lit(0L)))
-            .over(Window.partitionBy(keyCol)))
-        .persist())
-      (qmeta.filter(col("sufx") >= col("theta"))
-         .select(col(keyCol), col("term"), col("theta"), col("ne_sum")),
-       qmeta.filter(col("sufx") < col("theta")).select(keyCol, "term"))
-    }
-    val essRows0 = postings.join(Scale.maybeBroadcast(essential), "term")
+    // essential/non-essential split): query-keyed windows and one θ
+    // join inside the consumer's single action, no driver round trip.
+    // Its frames (seed, theta, essential, neTerms) are at most qt's
+    // rows plus two longs, but their optimizer estimates multiply
+    // through the ubs join, so Scale.maybeBroadcast would never
+    // broadcast them and each postings join would shuffle the corpus:
+    // gate them on qt's own estimate, doubled for the extra columns.
+    val thr = qt.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val qFits = thr > 0 && qt.queryExecution.optimizedPlan.stats.sizeInBytes * 2 <= thr
+    def qSide(df: org.apache.spark.sql.DataFrame) = if (qFits) broadcast(df) else df
+    val wq = Window.partitionBy(keyCol).orderBy(col("ub").desc, col("term").asc)
+    // query-batch-sized term geometry, persisted (lazily) so the seed
+    // broadcast and qmeta don't each re-run the ubs join + windows
+    val qts = own(qt.join(Scale.maybeBroadcast(ubs), "term")
+      .withColumn("sufx", sum(col("ub")).over(
+        wq.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+      .withColumn("pos", row_number().over(wq))
+      .persist())
+    val seed = qts.filter(col("pos") <= 2).select(keyCol, "term")
+    val theta = postings.join(qSide(seed), "term")
+      .groupBy(keyCol, "doc_id").agg(sum(col("cu")).as("lb"))
+      .groupBy(keyCol).agg(topkAgg(col("lb").cast("double"), col("doc_id")).as("top"))
+      .filter(size(col("top")) === k)
+      .select(col(keyCol),
+        element_at(col("top"), k).getField("score").cast("long").as("theta"))
+    // lazy persist, NOT an eager checkpoint: both consumers still
+    // compute the floor scan once via the cache, but the whole probe
+    // stays ONE action, so AQE schedules the broadcast subplans
+    // concurrently instead of behind serial phase-boundary jobs
+    val qmeta = own(qts.join(qSide(theta), Seq(keyCol), "left")
+      .withColumn("theta", coalesce(col("theta"), lit(0L)))
+      // largest non-essential sufx == whole non-essential ub sum; a
+      // sort-free partition window rides it on every term row, so the
+      // probe needs no separate per-query bound frame (and no join)
+      .withColumn("ne_sum",
+        max(when(col("sufx") < col("theta"), col("sufx")).otherwise(lit(0L)))
+          .over(Window.partitionBy(keyCol)))
+      .persist())
+    val essential = qmeta.filter(col("sufx") >= col("theta"))
+      .select(col(keyCol), col("term"), col("theta"), col("ne_sum"))
+    val neTerms = qmeta.filter(col("sufx") < col("theta")).select(keyCol, "term")
+    val essRows0 = postings.join(qSide(essential), "term")
     val essRows = essObs.map(o => essRows0.observe(o, count(lit(1)).as("rows")))
       .getOrElse(essRows0)
     // candidates: query-batch-bounded by construction (essential terms
@@ -1102,7 +1027,7 @@ object Similarity {
     // pair-keying makes the intermediate ≤ the final ne-row count.
     val neRows0 = postings
       .join(Scale.maybeBroadcast(candKeys), Seq("doc_id"))
-      .join(Scale.maybeBroadcast(neTerms), Seq(keyCol, "term"))
+      .join(qSide(neTerms), Seq(keyCol, "term"))
     val neRows = neObs.map(o => neRows0.observe(o, count(lit(1)).as("rows")))
       .getOrElse(neRows0)
     // full scores: the candidate-restricted non-essential contributions
@@ -1117,24 +1042,24 @@ object Similarity {
   }
 
   /** Top-k BM25 of the query split against the corpus split — the
-    * production retrieval entry (xs7, xs8's lexical arm). Path choice
-    * mirrors bm25ScoredOn's measured gate, but the inverted branch runs
+    * production retrieval entry (xs7, xs8's lexical arm). The same
+    * ≤64-term vocabulary probe as bm25ScoredOn picks the path: a
+    * small vocabulary ranks the dense pivot's scores, a real one runs
     * the max-score PRUNED probe (exact top-k, strictly fewer postings
     * rows) instead of scoring every posting of every query term.
     */
   private[queries] def bm25TopKOn(s: org.apache.spark.sql.SparkSession,
-      documents: org.apache.spark.sql.DataFrame, k: Int,
-      forceDense: Option[Boolean] = None): org.apache.spark.sql.DataFrame =
-    bm25TopKFromTf(s, tfTable(s, documents), k, forceDense)
+      documents: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame =
+    bm25TopKFromTf(s, tfTable(s, documents), k)
 
-  /** bm25TopKOn over a caller-built tf frame (see bm25PartsFromTf). */
+  /** bm25TopKOn over a caller-built tf frame (see bm25PartsFromTf);
+    * the ≤64-term vocabulary probe is its one path choice.
+    */
   private[queries] def bm25TopKFromTf(s: org.apache.spark.sql.SparkSession,
-      tf: org.apache.spark.sql.DataFrame, k: Int,
-      forceDense: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
+      tf: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
     val (postings, qt, dfT) = bm25PartsFromTf(tf)
     val vocabProbe = dfT.select("term").limit(65).collect().map(_.getString(0))
-    val dense = forceDense.getOrElse(vocabProbe.length <= 64)
-    if (!dense) {
+    if (vocabProbe.length > 64) {
       // the pruned probe reads the postings FOUR times (ubs, seed,
       // essential, candidate-keyed non-essential) — persist the narrow
       // (term, doc_id, cu) frame once so the scored-contribution float
@@ -1142,33 +1067,7 @@ object Similarity {
       // (measured 8.8 s → ~3 s at sf0.1 on the diversified corpus)
       val p = own(postings.persist())
       bm25TopKPruned(p, termUbs(p), qt, "qid", k)
-    } else {
-      val vocabAll =
-        if (vocabProbe.length > 64) vocabAllCapped(dfT)
-        else vocabProbe
-      rankTopK(denseScored(s, postings, qt, vocabAll), "qid", k)
-    }
-  }
-
-  /** Full-vocabulary driver fetch for the SPEC-ONLY forceDense
-    * override, capped by the same broadcast-threshold + absolute-cap
-    * gate the closure fast path uses (Clusters.collectedLabels): a
-    * future caller passing forceDense=Some(true) on a real corpus
-    * fails loudly at the cap instead of collecting an unbounded
-    * vocabulary into the driver. The auto gate (vocab <= 64) never
-    * reaches here.
-    */
-  private def vocabAllCapped(
-      dfT: org.apache.spark.sql.DataFrame): Array[String] = {
-    val thr = dfT.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val cap = if (thr > 0) math.min(thr / 32L, 4000000L).toInt else 0
-    require(cap > 0, "forceDense with broadcasting disabled: the dense " +
-      "pivot needs a driver-bounded vocabulary — use the inverted path")
-    val head = dfT.select("term").limit(cap + 1).collect()
-    require(head.length <= cap,
-      s"forceDense on a vocabulary past the dense-pivot cap ($cap terms)" +
-        " — use the inverted path (forceDense=None/Some(false))")
-    head.map(_.getString(0))
+    } else rankTopK(denseScored(s, postings, qt, vocabProbe), "qid", k)
   }
 
   private[graft] def bm25TopK(s: org.apache.spark.sql.SparkSession,
@@ -1197,37 +1096,37 @@ object Similarity {
         round(col("rrf"), 6).as("rrf"))
   }
 
+  /** Full BM25 scores (qid, doc_id, score_micro) of the query split
+    * against the corpus split; the ≤64-term vocabulary probe picks the
+    * dense pivot or the inverted probe (see bm25Scored).
+    */
   private[queries] def bm25ScoredOn(s: org.apache.spark.sql.SparkSession,
-      documents: org.apache.spark.sql.DataFrame,
-      forceDense: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
+      documents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val (postings, qt, dfT) = bm25Parts(s, documents)
     // Path gate: one bounded vocabulary probe (≤65 rows collected —
     // qx2's limit-65 discipline; never the full vocabulary of a real
     // corpus). NOTE: callers must wrap in reap{} — tf0's persist is
     // own()'d into the caller's dynamic scope.
     val vocabProbe = dfT.select("term").limit(65).collect().map(_.getString(0))
-    val dense = forceDense.getOrElse(vocabProbe.length <= 64)
-    // the auto gate guarantees dense ⇒ vocab ≤ 64; only the spec-only
-    // forceDense override can reach dense with a larger vocabulary,
-    // where the id map needs every term — capped so a misused
-    // override fails loudly (vocabAllCapped) instead of collecting
-    // an unbounded vocabulary
-    val vocabAll =
-      if (dense && vocabProbe.length > 64) vocabAllCapped(dfT)
-      else vocabProbe
-    if (!dense) {
-      // Inverted-index probe with the QUERY side broadcast
-      // (size-gated): the corpus-sized postings never shuffle;
-      // per-(query, doc) sums partial-aggregate inside the probe
-      // stage before their query-batch-bounded exchange.
-      postings.join(Scale.maybeBroadcast(qt), "term")
-        .groupBy("qid", "doc_id")
-        .agg(sum(col("cu")).as("score_micro"))
-    } else denseScored(s, postings, qt, vocabAll)
+    if (vocabProbe.length > 64) invertedScored(postings, qt)
+    else denseScored(s, postings, qt, vocabProbe)
   }
 
-  /** Dense small-vocabulary pivot (see bm25ScoredOn's gate). */
-  private def denseScored(s: org.apache.spark.sql.SparkSession,
+  /** Inverted-index probe with the QUERY side broadcast (size-gated):
+    * the corpus-sized postings never shuffle; per-(query, doc) sums
+    * partial-aggregate inside the probe stage before their
+    * query-batch-bounded exchange.
+    */
+  private[queries] def invertedScored(postings: org.apache.spark.sql.DataFrame,
+      qt: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    postings.join(Scale.maybeBroadcast(qt), "term")
+      .groupBy("qid", "doc_id")
+      .agg(sum(col("cu")).as("score_micro"))
+
+  /** Dense small-vocabulary pivot (see bm25ScoredOn's gate); `vocabAll`
+    * is the corpus's whole vocabulary (every posting term needs an id).
+    */
+  private[queries] def denseScored(s: org.apache.spark.sql.SparkSession,
       postings: org.apache.spark.sql.DataFrame,
       qt: org.apache.spark.sql.DataFrame,
       vocabAll: Array[String]): org.apache.spark.sql.DataFrame = {

@@ -16,6 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Bm25 semantics: scores match a from-scratch Scala replay of
   *    Okapi BM25 (k1=1.2, b=0.75, the ln(1+(N-df+0.5)/(df+0.5)) idf)
   *    with the same fixed-point micro-unit quantization.
+  *  - Max-score pruned probe: the unpruned top-k with strictly fewer
+  *    postings rows, planned lazily (building it runs no Spark job).
   *  - xs7/xs8 shape invariants on the fixture (contiguous ranks,
   *    rank-monotone scores, fused RRF arithmetic).
   *  - fkAudit detects a planted orphan and passes a clean parent set.
@@ -78,53 +80,37 @@ class RetrievalSpec extends AnyFunSuite {
   private def collectScores(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] =
     df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
 
+  /** The dense pivot over the corpus's FULL vocabulary — the ≤64 gate
+    * never routes a >64-term corpus here, so specs call it directly.
+    */
+  private def denseScores(documents: org.apache.spark.sql.DataFrame) =
+    collectScores(Det.reap {
+      val (postings, qt, dfT) = Similarity.bm25Parts(spark, documents)
+      Similarity.denseScored(spark, postings, qt,
+        dfT.select("term").collect().map(_.getString(0)))
+    })
+
+  /** The inverted probe, called directly (whatever the vocabulary). */
+  private def invertedScores(documents: org.apache.spark.sql.DataFrame) =
+    collectScores(Det.reap {
+      val (postings, qt, _) = Similarity.bm25Parts(spark, documents)
+      Similarity.invertedScored(postings, qt)
+    })
+
   test("synthetic corpus really exceeds the 64-term dense-path limit") {
     assert(corpus.flatMap(_._2).distinct.size > 64)
   }
 
   test("bm25: dense pivot == inverted probe on a 200-term corpus") {
     val docs = docsDf
-    val dense = Det.reap {
-      Similarity.bm25ScoredOn(spark, docs, forceDense = Some(true))
-    }
-    val inverted = Det.reap {
-      Similarity.bm25ScoredOn(spark, docs, forceDense = Some(false))
-    }
-    val (a, b) = (collectScores(dense), collectScores(inverted))
+    val (a, b) = (denseScores(docs), invertedScores(docs))
     assert(a.nonEmpty && a == b)
-  }
-
-  test("bm25 forceDense: vocabulary past the dense-pivot cap fails loudly") {
-    // the spec-only override must not be able to collect an unbounded
-    // vocabulary into the driver: shrink the broadcast threshold so
-    // the cap (thr/32) lands below the fixture's >64-term vocabulary
-    // and the dense path must throw instead of collecting
-    val conf = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(conf)
-    try {
-      spark.conf.set(conf, "320") // cap = 10 terms < 64 < fixture vocab
-      val e = intercept[IllegalArgumentException] {
-        Det.reap {
-          Similarity.bm25ScoredOn(spark, docsDf, forceDense = Some(true))
-        }
-      }
-      assert(e.getMessage.contains("dense-pivot cap"))
-      spark.conf.set(conf, "-1") // broadcasting disabled: also refuse
-      val e2 = intercept[IllegalArgumentException] {
-        Det.reap {
-          Similarity.bm25ScoredOn(spark, docsDf, forceDense = Some(true))
-        }
-      }
-      assert(e2.getMessage.contains("broadcasting disabled"))
-    } finally spark.conf.set(conf, saved)
   }
 
   test("bm25: both paths match the plain-Scala Okapi replay") {
     val expected = scalaBm25
-    val dense = collectScores(Det.reap {
-      Similarity.bm25ScoredOn(spark, docsDf, forceDense = Some(true))
-    })
-    assert(dense == expected)
+    assert(denseScores(docsDf) == expected)
+    assert(invertedScores(docsDf) == expected)
   }
 
   test("bm25: fixture vocabulary routes to the dense path (gate sanity)") {
@@ -137,9 +123,7 @@ class RetrievalSpec extends AnyFunSuite {
     val auto = collectScores(Det.reap {
       Similarity.bm25Scored(spark, sf)
     })
-    val inv = collectScores(Det.reap {
-      Similarity.bm25Scored(spark, sf, forceDense = Some(false))
-    })
+    val inv = invertedScores(Ctx(spark, sf).documents)
     assert(auto.nonEmpty && auto == inv)
   }
 
@@ -153,7 +137,8 @@ class RetrievalSpec extends AnyFunSuite {
     // the reap scope so tf0's own()'d persist is reaped normally — no
     // session-wide persistent-RDD drain.
     Det.reap {
-      val probe = Similarity.bm25ScoredOn(spark, docsDf, forceDense = Some(false))
+      val (postings, qt, _) = Similarity.bm25Parts(spark, docsDf)
+      val probe = Similarity.invertedScored(postings, qt)
       probe.write.format("noop").mode("overwrite").save()
       val plan = probe.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"),
@@ -202,8 +187,8 @@ class RetrievalSpec extends AnyFunSuite {
     assert(pruneCorpus.flatMap(_._2.flatMap(tokens)).distinct.size > 64)
     val k = 3
     val expected = topKSet(Det.reap {
-      Similarity.rankTopK(
-        Similarity.bm25ScoredOn(spark, docs, forceDense = Some(false)), "qid", k)
+      val (postings, qt, _) = Similarity.bm25Parts(spark, docs)
+      Similarity.rankTopK(Similarity.invertedScored(postings, qt), "qid", k)
     })
     // rows the UNPRUNED probe feeds its scoring stage: the full
     // postings × query-terms fan-out
@@ -231,8 +216,8 @@ class RetrievalSpec extends AnyFunSuite {
     val docs = docsDf
     val k = 5
     val expected = topKSet(Det.reap {
-      Similarity.rankTopK(
-        Similarity.bm25ScoredOn(spark, docs, forceDense = Some(false)), "qid", k)
+      val (postings, qt, _) = Similarity.bm25Parts(spark, docs)
+      Similarity.rankTopK(Similarity.invertedScored(postings, qt), "qid", k)
     })
     val pruned = topKSet(Det.reap {
       val (postings, qt, _) = Similarity.bm25Parts(spark, docs)
@@ -241,37 +226,43 @@ class RetrievalSpec extends AnyFunSuite {
     assert(expected.nonEmpty && pruned == expected)
   }
 
-  test("bm25 pruned probe: distributed planning branch == driver branch") {
-    // the geometry (ub sort, suffix sums, seed pick, theta floor,
-    // essential split) computes driver-side under the plan cap and
-    // distributedly over it — both branches must emit identical top-k
-    // AND the distributed branch must still prune. Forcing via the
-    // dedicated conf leaves broadcast planning untouched.
-    val docs = pruneDocsDf
-    val k = 3
-    val expected = topKSet(Det.reap {
-      val (postings, qt, _) = Similarity.bm25Parts(spark, docs)
-      Similarity.bm25TopKPruned(postings, Similarity.termUbs(postings), qt, "qid", k)
-    })
-    val essObs = org.apache.spark.sql.Observation()
-    val neObs = org.apache.spark.sql.Observation()
-    val unprunedRows = Det.reap {
-      val (postings, qt, _) = Similarity.bm25Parts(spark, docs)
-      postings.join(Scale.maybeBroadcast(qt), "term").groupBy().count()
-    }.head().getLong(0)
-    spark.conf.set("spark.graft.bm25.planCap", "0")
-    try {
-      val dist = topKSet(Det.reap {
-        val (postings, qt, _) = Similarity.bm25Parts(spark, docs)
-        Similarity.bm25TopKPruned(postings, Similarity.termUbs(postings), qt,
-          "qid", k, Some(essObs), Some(neObs))
-      })
-      assert(expected.nonEmpty && dist == expected)
-      val distRows = essObs.get("rows").asInstanceOf[Long] +
-        neObs.get("rows").asInstanceOf[Long]
-      assert(distRows < unprunedRows,
-        s"distributed pruning read $distRows rows, unpruned $unprunedRows")
-    } finally spark.conf.unset("spark.graft.bm25.planCap")
+  test("bm25 pruned probe: building the frame submits no Spark job") {
+    // the θ floor and the essential split are planned inside the lazy
+    // plan, never by a driver collect at build time. Jobs are counted
+    // by job group, so another thread's work cannot leak in; the
+    // marker job closes the window — listener events arrive in bus
+    // order, so once it is seen every earlier job start has been too.
+    val sc = spark.sparkContext
+    val group = s"bm25-plan-${System.nanoTime}"
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => started.put(
+            Option(p.getProperty("spark.job.description")).getOrElse("")))
+    }
+    Det.reap {
+      val (postings, qt, _) = Similarity.bm25Parts(spark, pruneDocsDf)
+      val ubs = Similarity.termUbs(postings)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "bm25 pruned probe build")
+      try {
+        val probe = Similarity.bm25TopKPruned(postings, ubs, qt, "qid", 3)
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1), 1).count()
+        def next() = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        var (jobs, e) = (0, next())
+        while (e != null && e != "marker") { jobs += 1; e = next() }
+        assert(e == "marker", "the marker job never reached the listener")
+        assert(jobs == 0, s"building the pruned probe ran $jobs Spark job(s)")
+        probe
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
   }
 
   test("xs7: contiguous ranks, rank-monotone scores, query split honored") {

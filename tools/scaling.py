@@ -48,7 +48,6 @@ def classify(t001, t01, t1):
 
 def main():
     f001, f01, f1, out = sys.argv[1:5]
-    wand_path = sys.argv[5] if len(sys.argv) > 5 else "bench/wand_branch.json"
     q001, q01, q1 = load(f001), load(f01), load(f1)
     names = [n for n in q1 if n in q01 and n in q001]
     rows, counts = [], {}
@@ -84,24 +83,6 @@ def main():
             "`overhead`/`flat` at these sizes are dominated by per-query "
             "stage orchestration, which amortizes away on a real cluster; "
             "the class to watch in any future change is `super`.\n\n")
-        try:
-            with open(wand_path) as wf:
-                w = json.load(wf)
-            f.write(
-                "## Distributed WAND planning branch (the 100 TB serving "
-                "path)\n\nThe pruned BM25 probe plans its theta/essential "
-                "split driver-side under a query-batch cap (200k, conf "
-                "`spark.graft.bm25.planCap`); past the cap the identical "
-                "geometry computes distributedly. Forcing that branch "
-                f"(planCap=0) on {w['query']} at sf0.1 measures "
-                f"**{w['distributed_plan_sec']:.2f} s vs "
-                f"{w['driver_plan_sec']:.2f} s** for the driver-plan branch "
-                f"({w['ratio']:.2f}x, same host window) - the branch a "
-                "corpus-scale query batch takes costs about the same as the "
-                "serving-batch fast path, so the cap is a latency "
-                "optimization, not a correctness or scale cliff.\n\n")
-        except FileNotFoundError:
-            pass
         f.write("| query | sf0.001 s | sf0.01 s | sf0.1 s | r10 | class |\n")
         f.write("|---|---|---|---|---|---|\n")
         for n, a, b, c, r, cls in rows:
