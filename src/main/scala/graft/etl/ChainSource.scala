@@ -9,8 +9,11 @@ import org.apache.spark.sql.functions._
   *
   *  - P1 head probe: latestBlock() reads head.json (the fixture's
   *    web3.eth.getBlock('latest') stand-in, main.py:200-201).
-  *  - P3 range scan: scan(from,to) reads ONLY [from,to] — the range
-  *    predicate is pushed into the JSON scan by Catalyst.
+  *  - P3 range scan: scan(from,to) returns only the rows of [from,to],
+  *    but the JSON source has no row-level pushdown: it parses the whole
+  *    file and only then filters rows on block_number, so every scan
+  *    reads the full chain file. (EtlJob persists what it resolves from
+  *    one scan, so a cycle's four loads do not read the file again.)
   *  - P4 batching: the range is split into ceil(range/batchSize)
   *    partitions of <=batchSize blocks (JOB_BLOCK_BATCH_SIZE=1000,
   *    main.py:34-35), so extraction parallelism is per-batch exactly

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Per-row content enrichment — reference P6: for each event, fetch the
@@ -18,6 +19,8 @@ trait IpfsResolver extends Serializable {
   def resolve(ipfsRef: String, embedded: Option[String]): Option[String]
   /** Called once per partition before use (open pools etc.). */
   def open(): Unit = ()
+  /** Called once per partition when its task ends, after a full drain,
+    * an early stop or a failure. */
   def close(): Unit = ()
 }
 
@@ -41,9 +44,9 @@ object Enrich {
     import spark.implicits._
     logs.as[ChainLog].mapPartitions { it =>
       resolver.open()
-      // NOTE: iterator is consumed lazily by the task; close() after a
-      // full drain via a wrapping iterator would be needed for pooled
-      // resources — EmbeddedResolver holds none.
+      // the iterator drains lazily, after this closure returns: close at
+      // task end, which also covers a failed or partly drained task
+      TaskContext.get().addTaskCompletionListener[Unit](_ => resolver.close())
       it.map { l =>
         ResolvedLog(l.block_number, l.log_index, l.address, l.topic0,
           resolver.resolve(l.topic0 + ":" + l.block_number, l.payload))

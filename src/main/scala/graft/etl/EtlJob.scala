@@ -5,11 +5,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** One ETL cycle — the Spark-native re-expression of the reference's
-  * _run() (main.py:197-220), as a single declarative plan per table:
+  * _run() (main.py:197-220). Like the reference, which extracts a range
+  * once into staging files that each load then reads (main.py:153-185),
+  * a cycle extracts once and loads four times:
   *
-  *   scan(range) -> filter(contract events) -> enrich(ipfs) ->
-  *   parse/flatten -> [explode products] -> enforce schema ->
-  *   empty short-circuit -> partitioned append -> cursor advance
+  *   scan(range) -> filter(contract events) -> enrich(ipfs) -> persist
+  *     -> per table: parse/flatten -> [explode products] -> enforce schema
+  *     -> per sink (valid + reject channel): empty short-circuit ->
+  *        partitioned append
+  *   -> cursor advance -> unpersist
+  *
+  * The persisted resolved frame is the cycle's staging area: every event
+  * is scanned and resolved once, and a table's valid and reject splits
+  * see the same resolved content. It is released when the cycle ends,
+  * whether the loads succeed or throw.
   *
   * Failure contract is the reference's: any exception leaves the cursor
   * unmoved, the whole range replays next cycle (at-least-once,
@@ -60,39 +69,40 @@ object EtlJob {
         val logs = source.scan(start, end, cfg.batchSize)
         val resolved = Enrich(logs.filter(
           col("address") === MarketplaceAddr &&
-            col("topic0").isin(MarketplaceTopic, DshopTopic)), cfg.resolver)
+            col("topic0").isin(MarketplaceTopic, DshopTopic)), cfg.resolver).persist()
+        try {
+          // P7: marketplace — flatten listing JSON to the 12-col schema
+          val marketplace = resolved
+            .filter(col("topic0") === MarketplaceTopic)
+            .withColumn("j", from_json(col("content"), Schemas.listingJson))
+            .select(col("block_number") +: col("log_index") +:
+              Schemas.listingJson.fieldNames.toIndexedSeq.map(n => col(s"j.$n")): _*)
 
-        // P7: marketplace — flatten listing JSON to the 12-col schema
-        val marketplace = resolved
-          .filter(col("topic0") === MarketplaceTopic)
-          .withColumn("j", from_json(col("content"), Schemas.listingJson))
-          .select(col("block_number") +: col("log_index") +:
-            Schemas.listingJson.fieldNames.toIndexedSeq.map(n => col(s"j.$n")): _*)
+          // P8: dshop — one output row per product in the catalog
+          val dshop = resolved
+            .filter(col("topic0") === DshopTopic)
+            .withColumn("j", from_json(col("content"), Schemas.dshopCatalogJson))
+            .select(col("block_number"), col("log_index"),
+              col("j.listing_id").as("listing_id"), col("j.ipfs_path").as("ipfs_path"),
+              explode(col("j.products")).as("p"))
+            .select(col("block_number"), col("log_index"), col("listing_id"),
+              col("p.product_id"), col("ipfs_path"), col("p.external_id"),
+              col("p.parent_external_id"), col("p.title"), col("p.description"),
+              col("p.price"), col("p.currency"), col("p.option1"), col("p.option2"),
+              col("p.option3"), col("p.image"))
 
-        // P8: dshop — one output row per product in the catalog
-        val dshop = resolved
-          .filter(col("topic0") === DshopTopic)
-          .withColumn("j", from_json(col("content"), Schemas.dshopCatalogJson))
-          .select(col("block_number"), col("log_index"),
-            col("j.listing_id").as("listing_id"), col("j.ipfs_path").as("ipfs_path"),
-            explode(col("j.products")).as("p"))
-          .select(col("block_number"), col("log_index"), col("listing_id"),
-            col("p.product_id"), col("ipfs_path"), col("p.external_id"),
-            col("p.parent_external_id"), col("p.title"), col("p.description"),
-            col("p.price"), col("p.currency"), col("p.option1"), col("p.option2"),
-            col("p.option3"), col("p.image"))
+          val em = SchemaEnforce(marketplace, Schemas.marketplace)
+          val ed = SchemaEnforce(dshop, Schemas.dshop)
 
-        val em = SchemaEnforce(marketplace.toDF(), Schemas.marketplace)
-        val ed = SchemaEnforce(dshop, Schemas.dshop)
+          val mRows = load(em.valid, s"${cfg.sinkDir}/marketplace", cfg)
+          val dRows = load(ed.valid, s"${cfg.sinkDir}/dshop", cfg)
+          val rejects = load(em.rejects, s"${cfg.sinkDir}/rejects/marketplace", cfg) +
+            load(ed.rejects, s"${cfg.sinkDir}/rejects/dshop", cfg)
 
-        val mRows = load(em.valid, s"${cfg.sinkDir}/marketplace", cfg)
-        val dRows = load(ed.valid, s"${cfg.sinkDir}/dshop", cfg)
-        val rejects = load(em.rejects, s"${cfg.sinkDir}/rejects/marketplace", cfg) +
-          load(ed.rejects, s"${cfg.sinkDir}/rejects/dshop", cfg)
-
-        // P13: cursor advances ONLY after both loads succeeded
-        cursor.write(end)
-        CycleStats(ran = true, start, end, mRows, dRows, rejects)
+          // P13: cursor advances ONLY after all four loads succeeded
+          cursor.write(end)
+          CycleStats(ran = true, start, end, mRows, dRows, rejects)
+        } finally resolved.unpersist(blocking = true)
     }
   }
 
@@ -103,20 +113,18 @@ object EtlJob {
     val withBucket = df.withColumn(
       "block_bucket", col("block_number") - (col("block_number") % cfg.batchSize))
     // P11 empty short-circuit as a LocalLimit(1) probe, and the P12 row
-    // count as an OBSERVED metric riding the write action itself — the
-    // batch is scanned once, never cached. (The previous form ran a
-    // full count() then the write over a persist()ed batch: two
-    // materializations and a whole-batch cache, which at production
-    // batch sizes is executor-memory pressure for nothing — observe()
-    // is the P16 mapping SURVEY §2.A prescribes anyway.)
+    // count as an OBSERVED metric riding the write action itself (the P16
+    // mapping SURVEY §2.A prescribes). Both read the cycle's persisted
+    // resolved frame, so neither re-scans the chain nor re-resolves.
     if (withBucket.isEmpty) 0L
     else {
       val obs = org.apache.spark.sql.Observation()
       val observed = withBucket.observe(obs, count(lit(1)).as("n"))
       val mode = if (cfg.idempotent) SaveMode.Overwrite else SaveMode.Append
-      if (cfg.idempotent)
-        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      observed.write.mode(mode).partitionBy("block_bucket").parquet(path)
+      // per-write option: an overwrite replaces only the buckets this batch
+      // writes, and the session's own overwrite mode is left as it was
+      observed.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+        .partitionBy("block_bucket").parquet(path)
       obs.get("n").asInstanceOf[Long]
     }
   }

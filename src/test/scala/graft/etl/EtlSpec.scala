@@ -4,10 +4,32 @@ import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicLong
+
+/** Embedded resolution that counts its calls. An object, so the local-mode
+  * tasks that deserialize it share its counters with the spec.
+  */
+object CountingResolver extends IpfsResolver {
+  val resolved, opened, closed = new AtomicLong(0)
+  def reset(): Unit = Seq(resolved, opened, closed).foreach(_.set(0))
+  def resolve(ipfsRef: String, embedded: Option[String]): Option[String] = {
+    resolved.incrementAndGet()
+    embedded
+  }
+  override def open(): Unit = opened.incrementAndGet()
+  override def close(): Unit = closed.incrementAndGet()
+}
+
+/** A resolver whose every call times out. */
+object FailingResolver extends IpfsResolver {
+  def resolve(ipfsRef: String, embedded: Option[String]): Option[String] =
+    throw new java.io.IOException(s"ipfs timeout resolving $ipfsRef")
+}
 
 /** Behavioral tests for the ETL slice (SURVEY §5.2.3): confirmation lag,
   * empty short-circuit, incremental advance, at-least-once replay +
-  * dedup-view exactness, REQUIRED reject channel, batch splitting.
+  * dedup-view exactness, REQUIRED reject channel, batch splitting, one
+  * extraction per cycle and the resources a cycle must release.
   */
 class EtlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -78,11 +100,43 @@ class EtlSpec extends AnyFunSuite {
   test("idempotent mode: replay does not duplicate (partition overwrite)") {
     val (root, cfg0) = freshDirs()
     val cfg = cfg0.copy(idempotent = true)
-    val s1 = EtlJob.runCycle(spark, cfg)
-    Files.delete(root.resolve("cursor").resolve("etl_cursor.json"))
-    EtlJob.runCycle(spark, cfg)
-    val raw = spark.read.parquet(s"${cfg.sinkDir}/marketplace")
-    assert(raw.count() == s1.marketplaceRows)
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(overwriteMode, "static")
+    try {
+      val s1 = EtlJob.runCycle(spark, cfg)
+      Files.delete(root.resolve("cursor").resolve("etl_cursor.json"))
+      EtlJob.runCycle(spark, cfg)
+      val raw = spark.read.parquet(s"${cfg.sinkDir}/marketplace")
+      assert(raw.count() == s1.marketplaceRows)
+      // the dynamic overwrite is per write; later overwrites in the
+      // session keep the session's mode
+      assert(spark.conf.get(overwriteMode) == "static")
+    } finally spark.conf.unset(overwriteMode)
+  }
+
+  test("one cycle resolves each contract event once, closes what it opens, caches nothing after") {
+    val (_, cfg0) = freshDirs()
+    val cfg = cfg0.copy(resolver = CountingResolver)
+    CountingResolver.reset()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val stats = EtlJob.runCycle(spark, cfg)
+    val (valid, bad) = ChainFixture.expectedMarketplace(stats.endBlock)
+    val events = valid + bad + ChainFixture.expectedDshopRows(stats.endBlock) / 3
+    // one extraction feeds all four loads (valid + reject, per table)
+    assert(CountingResolver.resolved.get == events)
+    assert(CountingResolver.opened.get > 0)
+    assert(CountingResolver.closed.get == CountingResolver.opened.get)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("a failing resolver fails the cycle: no persisted blocks, cursor unmoved") {
+    val (_, cfg0) = freshDirs()
+    val cfg = cfg0.copy(resolver = FailingResolver)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](EtlJob.runCycle(spark, cfg))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    assert(Cursor(cfg.cursorDir).read().isEmpty)
+    assert(!new java.io.File(s"${cfg.sinkDir}/marketplace").exists)
   }
 
   test("reject channel captures REQUIRED violations with full rows") {
