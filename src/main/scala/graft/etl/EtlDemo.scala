@@ -7,6 +7,9 @@ import java.nio.file.Files
   * BASELINE.md §2's pipeline criterion: one ~1000-block batch through
   * scan -> filter -> enrich -> flatten/explode -> enforce -> append ->
   * cursor commit in <= 15 s (one reference cycle, main.py:26,35).
+  * The record's `value` is that first cycle in a cold JVM; `warm_value`
+  * replays the same range into a fresh sink and cursor once the demo's
+  * other work has warmed the JVM, so it moves with the cycle itself.
   *
   * Usage: runMain graft.etl.EtlDemo [workDir]
   */
@@ -105,16 +108,30 @@ object EtlDemo {
       s"(head=${ChainFixture.Epoch + ChainFixture.Span - 1}, lag 4 held=" +
       s"${streamedMax <= ChainFixture.Epoch + ChainFixture.Span - 5})")
 
+    // the first cycle's range again, warm, into its own sink and cursor
+    ChainFixture.setHead(chain, ChainFixture.Epoch + 1003)
+    val warmCfg = cfg.copy(sinkDir = root.resolve("warm_sink").toString,
+      cursorDir = root.resolve("warm_cursor").toString)
+    val w0 = System.nanoTime()
+    val w = EtlJob.runCycle(spark, warmCfg)
+    val warmSec = (System.nanoTime() - w0) / 1e9
+    println(f"[etl-demo] warm replay of cycle1: blocks [${w.startBlock},${w.endBlock}] " +
+      f"in $warmSec%.2f s (extract ${w.extractS}%.2f, load ${w.loadS}%.2f, " +
+      f"commit ${w.commitS}%.3f)")
+
     val ok = sec <= 15.0 && s1.ran && s2.ran && !s3.ran &&
       streamedMax <= ChainFixture.Epoch + ChainFixture.Span - 5 &&
-      sqlRows == dedup && tailed == dedup
+      sqlRows == dedup && tailed == dedup &&
+      w.endBlock == s1.endBlock && w.marketplaceRows == s1.marketplaceRows &&
+      w.dshopRows == s1.dshopRows && w.rejectRows == s1.rejectRows
     println(s"[etl-demo] PASS=$ok")
     // record the pipeline-layer baseline row (BASELINE.md §2: one
     // 1,000-block cycle <= 15 s) where tools/results.py picks it up
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench/etl_last.json"),
       (f"""{"metric":"etl_cycle_1000_blocks","value":$sec%.3f,""" +
-        f""""unit":"sec","budget":15.0,"pass":$ok}""" + "\n").getBytes("UTF-8"))
+        f""""warm_value":$warmSec%.3f,"unit":"sec","budget":15.0,"pass":$ok}""" +
+        "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // reporting must not fail the demo
     spark.stop()
     if (!ok) sys.exit(1)

@@ -10,15 +10,25 @@ import org.apache.spark.sql.expressions.Window
   * a cycle extracts once and loads four times:
   *
   *   scan(range) -> filter(contract events) -> enrich(ipfs) -> persist
-  *     -> per table: parse/flatten -> [explode products] -> enforce schema
-  *     -> per sink (valid + reject channel): empty short-circuit ->
-  *        partitioned append
-  *   -> cursor advance -> unpersist
+  *     -> materialize (one count; 0 rows skips every load)
+  *     -> four concurrent loads, one thread per sink (valid + reject
+  *        channel per table), each: parse/flatten -> [explode products]
+  *        -> enforce schema -> empty short-circuit -> partitioned append
+  *     -> settle (wait for all four, succeeded or failed)
+  *   -> cursor advance (only if all four succeeded) -> unpersist
   *
-  * The persisted resolved frame is the cycle's staging area: every event
-  * is scanned and resolved once, and a table's valid and reject splits
-  * see the same resolved content. It is released when the cycle ends,
-  * whether the loads succeed or throw.
+  * The persisted resolved frame is the cycle's staging area: it is
+  * materialized before any load starts, so every event is scanned and
+  * resolved once whatever order the loads touch it in, and a table's
+  * valid and reject splits see the same resolved content. It is released
+  * only after every load has settled, whether the loads succeed or throw.
+  *
+  * The reference runs its loads one after the other and only the cursor
+  * commit waits for both (main.py:160-195,209-216). Here the loads
+  * overlap: each writes its own sink path, so every table still has one
+  * writer (P19), and the cursor still moves only after all of them
+  * succeeded (P13). A failed cycle throws its first load failure, with
+  * the others attached as suppressed.
   *
   * Failure contract is the reference's: any exception leaves the cursor
   * unmoved, the whole range replays next cycle (at-least-once,
@@ -48,9 +58,15 @@ object EtlJob {
       // (e.g. JdbcCursor against the warehouse DB, the reference shape)
       cursorStore: Option[CursorStore] = None)
 
+  /** Rows landed per table, and the wall seconds of the cycle's stages:
+    * `extractS` the materializing action (scan, enrich, shuffle),
+    * `loadS` the four concurrent loads until all settled, `commitS` the
+    * cursor write.
+    */
   final case class CycleStats(
       ran: Boolean, startBlock: Long, endBlock: Long,
-      marketplaceRows: Long, dshopRows: Long, rejectRows: Long)
+      marketplaceRows: Long, dshopRows: Long, rejectRows: Long,
+      extractS: Double = 0.0, loadS: Double = 0.0, commitS: Double = 0.0)
 
   /** P2+P3: compute the cycle's block range; None = empty cycle. */
   def plannedRange(cfg: Config, latest: Long, cursor: Option[Long]): Option[(Long, Long)] = {
@@ -94,15 +110,50 @@ object EtlJob {
           val em = SchemaEnforce(marketplace, Schemas.marketplace)
           val ed = SchemaEnforce(dshop, Schemas.dshop)
 
-          val mRows = load(em.valid, s"${cfg.sinkDir}/marketplace", cfg)
-          val dRows = load(ed.valid, s"${cfg.sinkDir}/dshop", cfg)
-          val rejects = load(em.rejects, s"${cfg.sinkDir}/rejects/marketplace", cfg) +
-            load(ed.rejects, s"${cfg.sinkDir}/rejects/dshop", cfg)
+          val t0 = System.nanoTime()
+          val events = resolved.count()
+          val t1 = System.nanoTime()
+          val Seq(mRows, dRows, mRejects, dRejects) =
+            if (events == 0) Seq(0L, 0L, 0L, 0L)
+            else settleAll(Seq(
+              () => load(em.valid, s"${cfg.sinkDir}/marketplace", cfg),
+              () => load(ed.valid, s"${cfg.sinkDir}/dshop", cfg),
+              () => load(em.rejects, s"${cfg.sinkDir}/rejects/marketplace", cfg),
+              () => load(ed.rejects, s"${cfg.sinkDir}/rejects/dshop", cfg)))
+          val t2 = System.nanoTime()
 
           // P13: cursor advances ONLY after all four loads succeeded
           cursor.write(end)
-          CycleStats(ran = true, start, end, mRows, dRows, rejects)
+          val t3 = System.nanoTime()
+          CycleStats(ran = true, start, end, mRows, dRows, mRejects + dRejects,
+            extractS = (t1 - t0) / 1e9, loadS = (t2 - t1) / 1e9, commitS = (t3 - t2) / 1e9)
         } finally resolved.unpersist(blocking = true)
+    }
+  }
+
+  /** Runs each task on its own daemon thread (`graft-etl-load-N`) and
+    * returns once every one has settled: their results in task order, or
+    * the first failure with the others attached as suppressed. The threads
+    * are made by the calling thread, so they inherit its Spark local
+    * properties (job group, scheduler pool). It returns, or rethrows a
+    * task's failure, only after joining every thread.
+    */
+  private def settleAll[T](tasks: Seq[() => T]): Seq[T] = {
+    val outcomes = new Array[Either[Throwable, T]](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      val t = new Thread(() => outcomes(i) =
+        try Right(task()) catch { case e: Throwable => Left(e) })
+      t.setName(s"graft-etl-load-${i + 1}")
+      t.setDaemon(true)
+      t
+    }
+    try threads.foreach(_.start())
+    finally threads.foreach(_.join())
+    outcomes.collect { case Left(e) => e } match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.toSeq.collect { case Right(v) => v }
     }
   }
 
@@ -114,8 +165,9 @@ object EtlJob {
       "block_bucket", col("block_number") - (col("block_number") % cfg.batchSize))
     // P11 empty short-circuit as a LocalLimit(1) probe, and the P12 row
     // count as an OBSERVED metric riding the write action itself (the P16
-    // mapping SURVEY §2.A prescribes). Both read the cycle's persisted
-    // resolved frame, so neither re-scans the chain nor re-resolves.
+    // mapping SURVEY §2.A prescribes). Both read the cycle's resolved
+    // frame, materialized before the loads start, so neither re-scans the
+    // chain nor re-resolves, even with the other three loads running.
     if (withBucket.isEmpty) 0L
     else {
       val obs = org.apache.spark.sql.Observation()

@@ -19,6 +19,9 @@ final class EtlLoop(spark: SparkSession, cfg: EtlJob.Config, intervalSec: Int = 
   val cycles = new AtomicLong(0)
   val marketplaceRows = new AtomicLong(0)
   val dshopRows = new AtomicLong(0)
+  val rejectRows = new AtomicLong(0)
+  /** Stats of the last cycle that landed a range (None until one has). */
+  private val lastLanded = new AtomicReference[Option[EtlJob.CycleStats]](None)
   val errors = new AtomicLong(0)
   val lastError = new AtomicReference[String]("")
 
@@ -47,6 +50,8 @@ final class EtlLoop(spark: SparkSession, cfg: EtlJob.Config, intervalSec: Int = 
       cycles.incrementAndGet()
       marketplaceRows.addAndGet(s.marketplaceRows)
       dshopRows.addAndGet(s.dshopRows)
+      rejectRows.addAndGet(s.rejectRows)
+      if (s.ran) lastLanded.set(Some(s))
       Some(s)
     } catch {
       case e: Exception =>
@@ -84,11 +89,20 @@ final class EtlLoop(spark: SparkSession, cfg: EtlJob.Config, intervalSec: Int = 
     while (i < numSec && alive.get()) { Thread.sleep(1000); i += 1 }
   }
 
-  /** P16/P17: the stats surface (the Flask GET / analog, main.py:256-266). */
-  def stats: Map[String, String] = Map(
-    "cycles" -> cycles.get().toString,
-    "marketplace_rows" -> marketplaceRows.get().toString,
-    "dshop_rows" -> dshopRows.get().toString,
-    "errors" -> errors.get().toString,
-    "last_error" -> lastError.get())
+  /** P16/P17: the stats surface (the Flask GET / analog, main.py:256-266),
+    * plus the stage timings of the last landed cycle in seconds. */
+  def stats: Map[String, String] = {
+    val last = lastLanded.get()
+    def secs(f: EtlJob.CycleStats => Double) = last.fold("")(s => f"${f(s)}%.3f")
+    Map(
+      "cycles" -> cycles.get().toString,
+      "marketplace_rows" -> marketplaceRows.get().toString,
+      "dshop_rows" -> dshopRows.get().toString,
+      "reject_rows" -> rejectRows.get().toString,
+      "errors" -> errors.get().toString,
+      "last_error" -> lastError.get(),
+      "last_extract_s" -> secs(_.extractS),
+      "last_load_s" -> secs(_.loadS),
+      "last_commit_s" -> secs(_.commitS))
+  }
 }

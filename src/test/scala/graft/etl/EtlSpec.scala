@@ -3,8 +3,9 @@ package graft.etl
 import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** Embedded resolution that counts its calls. An object, so the local-mode
   * tasks that deserialize it share its counters with the spec.
@@ -29,7 +30,8 @@ object FailingResolver extends IpfsResolver {
 /** Behavioral tests for the ETL slice (SURVEY §5.2.3): confirmation lag,
   * empty short-circuit, incremental advance, at-least-once replay +
   * dedup-view exactness, REQUIRED reject channel, batch splitting, one
-  * extraction per cycle and the resources a cycle must release.
+  * extraction per cycle, concurrent loads that settle before the cycle
+  * ends, and the resources a cycle must release.
   */
 class EtlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -139,6 +141,33 @@ class EtlSpec extends AnyFunSuite {
     assert(!new java.io.File(s"${cfg.sinkDir}/marketplace").exists)
   }
 
+  test("a failed load fails the cycle after all four settle; the next cycle replays the range") {
+    val (_, cfg) = freshDirs()
+    // a plain file where the marketplace reject sink's directory goes
+    val blocker = Paths.get(s"${cfg.sinkDir}/rejects/marketplace")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, "not a directory".getBytes("UTF-8"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](EtlJob.runCycle(spark, cfg))
+    assert(Cursor(cfg.cursorDir).read().isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-etl-load-")))
+    // the throw waited for the other loads: their writes committed
+    for (sink <- Seq("marketplace", "dshop"))
+      assert(new java.io.File(s"${cfg.sinkDir}/$sink/_SUCCESS").exists, sink)
+
+    Files.delete(blocker)
+    val head = ChainFixture.Epoch + ChainFixture.Span - 1
+    val stats = EtlJob.runCycle(spark, cfg)
+    assert(stats.startBlock == ChainFixture.Epoch && stats.endBlock == head - 4)
+    val (expValid, expBad) = ChainFixture.expectedMarketplace(head - 4)
+    assert(stats.marketplaceRows == expValid && stats.rejectRows == expBad)
+    assert(Cursor(cfg.cursorDir).read().contains(head - 4))
+    assert(EtlJob.dedupView(spark, s"${cfg.sinkDir}/marketplace", Schemas.marketplaceKey)
+      .count() == expValid)
+    assert(spark.read.parquet(blocker.toString).count() == expBad)
+  }
+
   test("reject channel captures REQUIRED violations with full rows") {
     val (_, cfg) = freshDirs()
     EtlJob.runCycle(spark, cfg)
@@ -181,6 +210,11 @@ class EtlSpec extends AnyFunSuite {
       assert(body.contains("\"cycles\":\"1\""))
       assert(body.contains("\"uptime_sec\""))
       assert(body.contains("\"errors\":\"0\""))
+      val (_, expBad) = ChainFixture.expectedMarketplace(ChainFixture.Epoch + ChainFixture.Span - 5)
+      assert(body.contains(s""""reject_rows":"$expBad""""))
+      for (k <- Seq("last_extract_s", "last_load_s", "last_commit_s"))
+        assert(raw""""$k":"\d+\.\d{3}"""".r.findFirstIn(body).isDefined, k)
+      assert(loop.stats("last_load_s").toDouble > 0)
     } finally srv.stop()
     // reference main.py:268-274: handler errors surface as HTTP 500
     val broken = new StatsServer(() => throw new RuntimeException("boom"), port = 0).start()
