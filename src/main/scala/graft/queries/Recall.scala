@@ -25,11 +25,11 @@ import Det._
   * Scale posture of the AUDIT itself: the exact ANN baselines
   * (xr1-xr4) brute-force only a fixed-count hash-ordered query sample
   * (first [[SampleK]] vec_ids by xxhash64) — O(n·K) at any corpus
-  * size, never a fraction of n² — and the sampled baseline is
-  * computed once per (session, corpus) and shared by xr1/xr2/xr3
-  * as a driver-resident ≤ SampleK·k id-pair array (bounded by
-  * constants). The pair-set certifications (xr5/xr6) stay group-edge
-  * arithmetic; xr7 compares two already-subquadratic pair queries.
+  * size, never a fraction of n² — and each query computes its
+  * sampled baseline as a driver-resident ≤ SampleK·k id-pair array
+  * (bounded by constants). The pair-set certifications (xr5/xr6)
+  * stay group-edge arithmetic; xr7 compares two already-subquadratic
+  * pair queries.
   *
   * Bench note: these run the sketch AND the exact baseline, so their
   * oracle (a constant row) is meaningless as a DuckDB time baseline —
@@ -114,78 +114,41 @@ object Recall {
   /** Exact top-5 over the sampled queries, as driver-resident
     * (vec_id, neighbor_id) pairs — AT MOST SampleK·5 two-long rows by
     * construction (bounded by constants, not data; the SURVEY §7
-    * collect rule is about data-sized state). Memoized per
-    * (session, sf-dir) so one sweep computes the O(n·K) brute force
-    * ONCE and xr1/xr2/xr3 all certify against the same baseline —
-    * the r7 shape recomputed it per query, 3× the dominant cost of
-    * the certification family. Holding collected ids (never a cached
-    * plan) keeps cache hygiene untouched: no persisted blocks outlive
-    * the computing query's reap. The memo assumes the corpus at `d`
-    * is immutable within a session (the fixture contract everywhere
-    * in this registry); auditing a refreshed corpus needs a new
-    * session or path. Scoring/tie rules match qx3 exactly
-    * (round-4 score desc, neighbor_id asc).
+    * collect rule is about data-sized state). Each of xr1/xr2/xr3
+    * computes it from the parquet inputs when it runs, so a refreshed
+    * corpus at the same path is audited as it is now. Scoring/tie
+    * rules match qx3 exactly (round-4 score desc, neighbor_id asc).
     */
-  private val baselineMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      Array[(Long, Long)]]()
-
-  /** Bench hook (graft.Memos): drop the memoized baselines so a TIMED
-    * bench run recomputes the exact brute force from the parquet
-    * inputs (r15 verdict, gaming item #1 — a memo entry under the
-    * timed runs measures a HashMap fetch, not the query). Verify and
-    * in-run sharing are unaffected.
-    */
-  private[graft] def clearBaselineMemo(): Unit = baselineMemo.clear()
-
-  private def memoized(s: SparkSession, d: String, tag: String)(
-      compute: => Array[(Long, Long)]): Array[(Long, Long)] = {
-    // get/putIfAbsent, NOT computeIfAbsent: the mapping function must
-    // not mutate the map (the size-capped clear would) and must not
-    // run a multi-second Spark job while holding a bin lock. A racing
-    // duplicate compute is benign — the baseline is deterministic.
-    val k = (s, d, tag)
-    val hit = baselineMemo.get(k)
-    if (hit != null) hit
-    else {
-      if (baselineMemo.size > 16) baselineMemo.clear() // old sessions/dirs
-      val v = compute
-      baselineMemo.putIfAbsent(k, v)
-      v
-    }
+  private def exactTopkSample(s: SparkSession, d: String): Array[(Long, Long)] = {
+    graft.functions.VectorOps.register(s)
+    val c = Ctx(s, d)
+    val topk = udaf(new graft.functions.TopK(5),
+      org.apache.spark.sql.Encoders.product[graft.functions.Scored])
+    val e = own(c.embeddings
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))
+      .persist())
+    val qs = e.join(broadcast(sampledQueryIds(e)), Seq("vec_id"), "left_semi")
+      .select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
+    val ref = e.select(col("vec_id").as("neighbor_id"),
+      col("v").as("vb"), col("nrm").as("nb"))
+    qs.join(Scale.maybeBroadcast(ref),
+        col("vec_id") =!= col("neighbor_id"))
+      .select(col("vec_id"), col("neighbor_id"),
+        round(expr("vec_dot(va, vb)") / (col("na") * col("nb")), 4)
+          .as("score"))
+      .groupBy("vec_id")
+      .agg(topk(col("score"), col("neighbor_id")).as("top"))
+      .select(col("vec_id"), explode(col("top")).as("t"))
+      .select(col("vec_id"), col("t.id").as("neighbor_id"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
   }
 
-  private def exactTopkSample(s: SparkSession, d: String): Array[(Long, Long)] =
-    memoized(s, d, "allpairs") {
-      graft.functions.VectorOps.register(s)
-      val c = Ctx(s, d)
-      val topk = udaf(new graft.functions.TopK(5),
-        org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-      val e = own(c.embeddings
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))
-        .persist())
-      val qs = e.join(broadcast(sampledQueryIds(e)), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
-      val ref = e.select(col("vec_id").as("neighbor_id"),
-        col("v").as("vb"), col("nrm").as("nb"))
-      qs.join(Scale.maybeBroadcast(ref),
-          col("vec_id") =!= col("neighbor_id"))
-        .select(col("vec_id"), col("neighbor_id"),
-          round(expr("vec_dot(va, vb)") / (col("na") * col("nb")), 4)
-            .as("score"))
-        .groupBy("vec_id")
-        .agg(topk(col("score"), col("neighbor_id")).as("top"))
-        .select(col("vec_id"), explode(col("top")).as("t"))
-        .select(col("vec_id"), col("t.id").as("neighbor_id"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-    }
-
-  /** Recall of an ANN sketch vs the shared sampled exact baseline.
+  /** Recall of an ANN sketch vs the sampled exact baseline.
     * Both compared sets are ≤ SampleK·5 pairs, so the set algebra runs
-    * on the driver: the only cluster work is the (memoized) baseline
-    * and the sketch itself, filtered to the sampled queries while
+    * on the driver: the only cluster work is the baseline and the
+    * sketch itself, filtered to the sampled queries while
     * still distributed (InSet over ≤ SampleK ids in the scan stage).
     */
   private def topkRecall(name: String, sketch: GQuery, floor: Double) =
@@ -229,13 +192,13 @@ object Recall {
     * scale. Both compared sets are ≤ SampleK·5 pairs → driver set
     * algebra, as in topkRecall.
     */
-  /** Shared exact bipartite baseline for the query-vs-corpus sketches
-    * (xs4's IVF probe, xs9's PQ-ADC): exact top-5 of the SampleK
-    * fixed-count query sample against the full corpus, memoized per
-    * (session, sf) so xr4 and xr12 pay the brute force once.
+  /** Exact bipartite baseline for the query-vs-corpus sketches (xs4's
+    * IVF probe, xs9's PQ-ADC): exact top-5 of the SampleK fixed-count
+    * query sample against the full corpus, computed by each of xr4 and
+    * xr12 when it runs.
     */
   private def exactBipartiteSample(s: SparkSession, d: String)
-      : Array[(Long, Long)] = memoized(s, d, "bipartite") {
+      : Array[(Long, Long)] = {
     graft.functions.VectorOps.register(s)
     val c = Ctx(s, d)
     val all = c.embeddings
@@ -282,8 +245,8 @@ object Recall {
     Some(reportSql("xs4_ann_query", "bipartite_recall_vs_exact",
       Some(5), 0.50, None)))
 
-  /** xs9's PQ-ADC retrieval vs the SAME exact bipartite baseline as
-    * xr4 (shared memo — the brute force runs once per session+sf).
+  /** xs9's PQ-ADC retrieval vs the same exact bipartite baseline as
+    * xr4 (exactBipartiteSample, recomputed here).
     * PQ's approximation is code-bucketing error on the dot product;
     * the PqCandFactor·k cut + exact rescore absorbs most of it, so
     * the measured recall tracks xs3's quantize-then-rescore posture
@@ -488,19 +451,20 @@ object Recall {
   /** The PRODUCTION hybrid (operators.HybridRetrieval: BM25 lexical
     * arm + ANN-index dense arm, same rrfFuse) vs the exact xs8 fusion
     * (brute-force dense arm): fused top-5 recall over (qid, doc_id)
-    * pairs. The index is built once per (session, corpus) over the
-    * corpus split and memoized; both compared sets are queries·5 rank
-    * rows, compared via the distributed keySet/semi-join path. The
-    * lexical arm is IDENTICAL in both forms, so the measured gap is
-    * exactly the dense arm's ANN approximation as it survives fusion
-    * — measured ≈0.9 (sf0.001/0.01); floor 0.50 tracks xr2's posture
-    * (certify "still works", not a tuning target).
+    * pairs. Each run builds the index over the corpus split into a
+    * temp dir and deletes it once the result is checkpointed
+    * (HybridRetrieval.withCorpusIndex); both compared sets are
+    * queries·5 rank rows, compared via the distributed
+    * keySet/semi-join path. The lexical arm is IDENTICAL in both
+    * forms, so the measured gap is exactly the dense arm's ANN
+    * approximation as it survives fusion — measured ≈0.9
+    * (sf0.001/0.01); floor 0.50 tracks xr2's posture (certify "still
+    * works", not a tuning target).
     */
   val xr8 = GQuery(
     "xr8_hybrid_ann_recall",
-    (s, d) => reap {
+    (s, d) => graft.operators.HybridRetrieval.withCorpusIndex(s, d) { idx => reap {
       val cols = Seq("qid", "doc_id")
-      val idx = graft.operators.HybridRetrieval.ensureCorpusIndex(s, d)
       // the lexical arm is IDENTICAL in both fusion forms — compute
       // and persist it once, feed it to both (the BM25 pipeline was
       // the audit's dominant duplicated cost)
@@ -516,7 +480,7 @@ object Recall {
       System.err.println(f"[recall] xr8_hybrid_ann_recall measured=$r%.4f floor=$floor")
       canon(report(s, "hybrid_rrf_ann", "fused_topk_recall_vs_exact",
         Some(5), floor, None, r >= floor))
-    },
+    }},
     Some(reportSql("hybrid_rrf_ann", "fused_topk_recall_vs_exact",
       Some(5), 0.50, None)))
 
@@ -921,11 +885,9 @@ object Recall {
     (s, d) => reap {
       val c = Ctx(s, d)
       val docs = own(c.documents.persist())
-      // two INDEPENDENT runs (arms 0 and 1) for the determinism
-      // clause; arm 0 is shared with xt16's table through the memo so
-      // a sweep trains the corpus twice, not three times
-      val (m1, trainerToks) = Bpe.trainRun(s, d, 24, 0)
-      val m2 = Bpe.trainRun(s, d, 24, 1)._1
+      // two independent train runs for the determinism clause
+      val (m1, trainerToks) = Bpe.trainRun(s, d, 24)
+      val m2 = Bpe.trainRun(s, d, 24)._1
       val deterministic = m1 == m2 && m1.size == 24
       val first = docs
         .select(explode(Llm.tokens(s, col("text"))).as("w"))

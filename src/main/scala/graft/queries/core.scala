@@ -34,8 +34,7 @@ final case class Ctx(spark: SparkSession, dir: String) {
     * 3.1s, xv6 2.0s → 3.6s — user-specified-schema reads take a
     * different reader path, so that approach was reverted). The
     * fixture contract everywhere in this registry is that the corpus
-    * at `dir` is immutable within a session, the same assumption
-    * Recall's baseline memo and Bpe's trainer memo already lean on.
+    * at `dir` is immutable within a session.
     */
   def table(n: String): DataFrame = {
     val p = s"$dir/$n.parquet"

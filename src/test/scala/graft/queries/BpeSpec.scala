@@ -107,6 +107,30 @@ class BpeSpec extends AnyFunSuite {
     } finally drainCaches()
   }
 
+  test("ShippedMerges256 IS the sf0.01 trainer output (provenance)") {
+    try {
+      val docs = Ctx(spark, "/root/testdata/sf0.01").documents
+      val ms = Bpe.train(spark, Bpe.trainCorpus256(spark, docs), 256)
+      // on a drift, print the trained table as the Scala literal
+      def literal = ms.grouped(5).map(g => "    " + g.map { case (a, b) =>
+        s"""("$a", "$b")""" }.mkString(", ") + ",").mkString("\n")
+      assert(ms == Bpe.ShippedMerges256,
+        s"ShippedMerges256 drifted from the fixture trainer output:\n$literal")
+    } finally drainCaches()
+  }
+
+  test("driver-path trainWithVocab on sf0.01 submits 3 Spark jobs") {
+    try {
+      val docs = Ctx(spark, "/root/testdata/sf0.01").documents
+      val (_, jobs) = SparkTestSession.jobsIn {
+        Bpe.trainWithVocab(spark, docs, 24)
+      }
+      // one bounded vocabulary collect; under AQE its shuffle stages
+      // are jobs too. A per-rank driver action would add ~24.
+      assert(jobs == 3, s"one driver-path training ran $jobs Spark jobs")
+    } finally drainCaches()
+  }
+
   test("word-memoized path == whole-doc fixpoint path (both tables)") {
     import spark.implicits._
     // adversarial shapes: overlap runs, repeated words, mixed case,

@@ -48,6 +48,20 @@ class ClustersSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("components on a small graph submits 6 Spark jobs") {
+    // the fused closure: the contraction checkpoint and one bounded
+    // class-edge collect, with their AQE shuffle and broadcast stages;
+    // the returned labels stay lazy
+    val (_, jobs) = SparkTestSession.jobsIn {
+      Clusters.components(
+        (0L to 20L).map(n => (n, n)).toDF("doc_id", "rep_id"),
+        Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L),
+          (10L, 11L), (11L, 12L), (10L, 12L), (14L, 18L))
+          .toDF("doc_a", "doc_b"))
+    }
+    assert(jobs == 6, s"one components call ran $jobs Spark jobs")
+  }
+
   test("xd5 representatives agree with union-find over its own pair stage") {
     val sf = "/root/testdata/sf0.001"
     val docs = Ctx(spark, sf).documents

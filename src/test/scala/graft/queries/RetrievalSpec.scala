@@ -228,40 +228,15 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("bm25 pruned probe: building the frame submits no Spark job") {
     // the θ floor and the essential split are planned inside the lazy
-    // plan, never by a driver collect at build time. Jobs are counted
-    // by job group, so another thread's work cannot leak in; the
-    // marker job closes the window — listener events arrive in bus
-    // order, so once it is seen every earlier job start has been too.
-    val sc = spark.sparkContext
-    val group = s"bm25-plan-${System.nanoTime}"
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => started.put(
-            Option(p.getProperty("spark.job.description")).getOrElse("")))
-    }
+    // plan, never by a driver collect at build time
     Det.reap {
       val (postings, qt, _) = Similarity.bm25Parts(spark, pruneDocsDf)
       val ubs = Similarity.termUbs(postings)
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "bm25 pruned probe build")
-      try {
-        val probe = Similarity.bm25TopKPruned(postings, ubs, qt, "qid", 3)
-        sc.setJobDescription("marker")
-        sc.parallelize(Seq(1), 1).count()
-        def next() = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        var (jobs, e) = (0, next())
-        while (e != null && e != "marker") { jobs += 1; e = next() }
-        assert(e == "marker", "the marker job never reached the listener")
-        assert(jobs == 0, s"building the pruned probe ran $jobs Spark job(s)")
-        probe
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
+      val (probe, jobs) = SparkTestSession.jobsIn {
+        Similarity.bm25TopKPruned(postings, ubs, qt, "qid", 3)
       }
+      assert(jobs == 0, s"building the pruned probe ran $jobs Spark job(s)")
+      probe
     }
   }
 
