@@ -8,19 +8,20 @@ import graft.queries.Registry
   * which runs the full physical plan (all shuffles/aggregations) without
   * materializing rows to the driver. Emits ONE JSON line.
   *
-  * Modes (env):
-  *  - SPARK_GRAFT_BENCH_MODE=cold: one timed run per query, no warm-up —
-  *    mirrors the driver's single-pass measurement so budget breaches
-  *    that only appear cold (codegen + page-cache misses) are caught
-  *    locally before the driver runs. Default: the median protocol.
+  * The discarded run pays each query's first-use costs (class loading,
+  * JIT, codegen), so there is no up-front warm-up.
+  *
+  * Options (env):
+  *  - SPARK_GRAFT_SF_DIR: fixture directory (default sf0.1).
+  *  - SPARK_GRAFT_CPUS=N: `local[N]` and N shuffle partitions.
+  *  - SPARK_GRAFT_CONF=k=v[,k=v]: session-conf overrides.
   *  - SPARK_GRAFT_ONLY=q1,q2: focus list for targeted tuning.
-  *  - SPARK_GRAFT_HEADLINE=1: only queries flagged GQuery.headline.
+  *  - SPARK_GRAFT_RUNS=N: median of N timed runs instead of 3.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cold = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("cold")
     def buildSession(): SparkSession = {
       val s = SparkSession.builder()
         .master(s"local[$cpus]")
@@ -97,320 +98,10 @@ object Bench {
       .sum >> 20
     final case class QTelem(gc: Long, jit: Long, cc: Long, blk: Long)
 
-    // Generic engine warm-up — touches no benchmark query: absorbs
-    // first-use costs that belong to the JVM/session, not any query
-    // (JIT + codegen compiler init, shuffle machinery, parquet reader
-    // + noop committer init). Without it the first measured query pays
-    // ~4 s of session startup, which in cold mode (single timed run)
-    // misattributes that cost to whichever query runs first. A def —
-    // not inline — because the mid-sweep session-restart escape hatch
-    // below must re-run it against the fresh session (JIT and the
-    // global codegen cache survive a restart, but session-scoped
-    // machinery — shuffle system, noop committer, file-index caches —
-    // does not).
-    def warmUp(spark: SparkSession): Unit = {
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .repartition(2).groupBy("r_name").count()
-      .write.format("noop").mode("overwrite").save()
-    // Same idea for the OTHER aggregate machinery: median/percentile
-    // route through ObjectHashAggregate + the interpreted Percentile
-    // buffer, window functions through WindowExec — class loading +
-    // JIT for those paths is likewise a JVM fixed cost that a cold
-    // single-pass run would otherwise charge to the first query using
-    // them (q03b read 5.6 s in the r5 driver run vs 0.74 s warm; ~1 s
-    // of that is this first-use cost). 5 rows of region keep the
-    // warm-up itself sub-100ms.
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
-      r.groupBy("r_name")
-        .agg(median(col("r_regionkey")).as("m"),
-          skewness(col("r_regionkey")).as("sk"),
-          corr(col("r_regionkey"), col("r_regionkey")).as("c"),
-          stddev_samp(col("r_regionkey")).as("sd"))
-        .write.format("noop").mode("overwrite").save()
-      r.select(col("r_name"),
-          row_number().over(Window.orderBy("r_regionkey")).as("rn"))
-        .write.format("noop").mode("overwrite").save()
-      // The vectorized parquet DECIMAL/DATE decoders are separate
-      // classes from the long/string ones region exercises — first
-      // decimal scan otherwise pays their load+JIT. Write a 100-row
-      // synthetic file to /tmp and read it back: warms the decoder
-      // classes without touching any benchmark table's data beyond
-      // the byte-priming above.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("bench_warm").toString + "/t"
-      spark.range(100)
-        .select(col("id"),
-          (col("id") * 7).cast("decimal(12,2)").as("d"),
-          date_add(lit(java.sql.Date.valueOf("2020-01-01")),
-            col("id").cast("int")).as("dt"),
-          concat(lit("s"), col("id")).as("s"))
-        .write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).groupBy("s")
-        .agg(sum(col("d")).as("sd"), median(col("d")).as("md"),
-          max(col("dt")).as("mx"))
-        .write.format("noop").mode("overwrite").save()
-      // The text-analysis family (xt*/xd*/xp*/qx*) all route through
-      // the Tokenize kernel + array HOF codegen paths; their first use
-      // costs ~1.5-2 s of class loading + JIT that a cold single-pass
-      // run charges to whichever tokenizing query runs first (every
-      // cold risk in r6's sweep was in this family). Warm those
-      // engine paths on 50 tiny synthetic rows — no benchmark table.
-      // The textual-SQL family (q40-q69) enters through spark.sql —
-      // parser + analyzer + the decimal-heavy aggregate codegen of
-      // the TPC-H shapes are first-use costs a cold sweep charges to
-      // whichever SQL query runs first (q61 read 4.2 s cold vs 0.6 s
-      // warm in the r7 board). One tiny SQL with the same ingredient
-      // list (decimal sum/avg, CASE, GROUP BY + ORDER BY, a window)
-      // over 5 region rows warms that path generically.
-      r.createOrReplaceTempView("bench_warm_region")
-      spark.sql(
-        """SELECT r_name,
-          |  SUM(CAST(r_regionkey AS DECIMAL(18,4)) * CAST(1.02 AS DECIMAL(18,4))) AS s,
-          |  AVG(CASE WHEN r_regionkey > 1 THEN r_regionkey ELSE 0 END) AS a,
-          |  COUNT(*) AS c,
-          |  ROW_NUMBER() OVER (ORDER BY r_name) AS rn
-          |FROM bench_warm_region GROUP BY r_name ORDER BY r_name""".stripMargin)
-        .write.format("noop").mode("overwrite").save()
-      // The fingerprint family (xv1/xv3, TableCheck/TableDiff) runs
-      // md5-over-concat_ws rendering in every scan stage; warm that
-      // expression path too.
-      r.select(md5(concat_ws("|", col("r_name"),
-          col("r_regionkey").cast("string"))).as("h"))
-        .groupBy("h").count()
-        .write.format("noop").mode("overwrite").save()
-      val wdocs = spark.range(50).select(col("id"),
-        concat(lit("the quick brown fox jumps over the lazy dog row "),
-          col("id")).as("text"))
-      wdocs
-        .select(col("id"), explode(graft.queries.Llm.tokens(spark, col("text"))).as("t"))
-        .groupBy("t").count()
-        .write.format("noop").mode("overwrite").save()
-      wdocs
-        .select(expr("aggregate(transform(split(text, ' '), x -> xxhash64(x)), " +
-          "0L, (a, h) -> xxhash64(a, h))").as("h"))
-        .groupBy("h").count()
-        .write.format("noop").mode("overwrite").save()
-      // Remaining cold-tail entry paths (r7 board: xv3 2.79 s, xe6
-      // 2.28 s, xd11 2.54 s cold vs ~1.1-1.4 s warm), each loaded by
-      // classes no earlier warm-up touches:
-      //  - Md5Hash60 + DECIMAL(38,0) fold: the TableCheck/TableDiff
-      //    row-hash kernel behind xv1/xv3;
-      //  - FULL-OUTER sort-merge join: xv3's diff join and q08b (the
-      //    other warmed joins are all hash/broadcast shapes);
-      //  - lag/lead window frames + fixed-point DIV: xe6's transition
-      //    matrix and xd11's span walk (row_number alone leaves the
-      //    offset-window machinery cold).
-      graft.functions.Md5Hash60.register(spark)
-      val ha = r.select(col("r_regionkey").as("k"),
-        expr("CAST(md5_60(CAST(concat_ws('|', r_name) AS BINARY)) AS DECIMAL(38,0))")
-          .as("h"))
-      val hb = r.select((col("r_regionkey") + 2).as("k"),
-        expr("CAST(md5_60(CAST(concat_ws('|', upper(r_name)) AS BINARY)) AS DECIMAL(38,0))")
-          .as("h2"))
-      ha.join(hb, Seq("k"), "full_outer")
-        .groupBy(col("h").isNull.as("st"))
-        .agg((sum(col("h2")) % lit(1152921504606846976L)).as("c"))
-        .write.format("noop").mode("overwrite").save()
-      r.select(col("r_regionkey"),
-          lag(col("r_regionkey"), 1).over(Window.orderBy("r_regionkey")).as("lg"),
-          lead(col("r_regionkey"), 1).over(Window.orderBy("r_regionkey")).as("ld"))
-        .filter(col("lg").isNotNull)
-        .select(expr("r_regionkey * 1000000 DIV greatest(ld, 1)").as("q"))
-        .groupBy("q").count()
-        .write.format("noop").mode("overwrite").save()
-      r.join(r.select((col("r_regionkey") + lit(100)).as("r_regionkey")),
-          Seq("r_regionkey"), "left_anti")
-        .write.format("noop").mode("overwrite").save()
-      // xd11's k-gram kernel (posexplode over a transform/sequence/
-      // aggregate/slice chain) and the retrieval family's map pivots
-      // (map_from_entries + try_element_at inside transform) are
-      // interpreted-HOF classes nothing above loads; their first use
-      // cost ~1 s in the r8 cold sweep (xd11 2.04 s vs its 2.00 s
-      // budget — the one remaining cold-risk row).
-      r.select(col("r_regionkey"),
-          expr("transform(split(r_name, ''), x -> xxhash64(x))").as("htoks"))
-        .select(col("r_regionkey"), posexplode(expr(
-          """transform(sequence(1, greatest(size(htoks) - 2, 1)),
-            |  i -> aggregate(slice(htoks, i, 3), 1125899906842597L,
-            |         (h, x) -> xxhash64(h, x)))""".stripMargin))
-          .as(Seq("pos", "kg")))
-        .groupBy("kg").count()
-        .write.format("noop").mode("overwrite").save()
-      r.select(col("r_regionkey"),
-          expr("map_from_entries(array(struct(0, 1.0d), struct(1, 2.0d)))").as("m"))
-        .select(expr(
-          "transform(sequence(0, 2), i -> coalesce(try_element_at(m, i), 0.0d))").as("a"))
-        .groupBy("a").count()
-        .write.format("noop").mode("overwrite").save()
-      // The SimHash vote kernels (xd2/xd2b) are custom codegen
-      // Expressions whose generated classes nothing else loads —
-      // xd2b's fused md5 kernel measured 4.4 s cold vs ~1.9 s warm in
-      // the r11 focused cold probe, almost entirely this first use.
-      // xd6's incremental-dedup shapes (filter() lambdas over arrays,
-      // element_at, lexicographic max(struct(...)) aggregate) are
-      // likewise first-use-only classes.
-      graft.functions.SimHashSig.register(spark)
-      graft.functions.SimHashMd5Sig.register(spark)
-      r.select(
-          expr("simhash_md5_sig(split(r_name, ''), 16)").as("s1"),
-          expr("simhash_sig(transform(split(r_name, ''), x -> xxhash64(x)), 16)")
-            .as("s2"))
-        .groupBy("s1", "s2").count()
-        .write.format("noop").mode("overwrite").save()
-      r.select(col("r_regionkey"),
-          expr("filter(sequence(1, 5), i -> i % 2 = 0)").as("fa"),
-          expr("filter(sequence(1, 5), i -> i % 2 = 1)").as("fb"))
-        .filter(size(col("fa")) > 0)
-        .select(col("r_regionkey"), element_at(col("fa"), 1).as("mn"),
-          col("fb"))
-        .groupBy("mn")
-        .agg(max(struct(col("r_regionkey").cast("double").as("j"),
-          (-col("mn")).as("neg"))).as("best"))
-        .select(col("best.j").as("j"), (-col("best.neg")).as("m"))
-        .groupBy("j").count()
-        .write.format("noop").mode("overwrite").save()
-      // xv6's full first-use surface, mirrored shape-for-shape on the
-      // 5-row region table (r9's unpivot-only warm recovered part of
-      // the 2.9 s cold graze; the wide typed-agg codegen, the
-      // array-of-structs profile explode, and the 7-row left-join +
-      // coalesce stitch were still first-use):
-      val pcols = Seq("c0", "c1", "c2")
-      val pr = r.select(col("r_regionkey").as("c0"), col("r_name").as("c1"),
-        date_add(to_date(lit("2020-01-01")),
-          col("r_regionkey").cast("int")).as("c2"))
-      val paggs = pcols.flatMap { cn =>
-        Seq(count(col(cn)).as(s"nn_$cn"),
-          min(col(cn)).cast("string").as(s"mn_$cn"),
-          max(col(cn)).cast("string").as(s"mx_$cn"))
-      }
-      val pout = pcols.zipWithIndex.map { case (cn, i) =>
-        struct(lit(cn).as("col_name"), lit(i).as("idx"), col("n_rows"),
-          (col("n_rows") - col(s"nn_$cn")).as("n_null"),
-          col(s"mn_$cn").as("min_str"), col(s"mx_$cn").as("max_str"))
-      }
-      val pbase = pr.agg(count(lit(1)).as("n_rows"), paggs: _*)
-        .select(explode(array(pout: _*)).as("pw"))
-        .select("pw.*")
-      val pnd = pr
-        .select(posexplode(array(pcols.map(cn =>
-          when(col(cn).isNull, lit(null)).otherwise(xxhash64(col(cn)))): _*))
-          .as(Seq("idx", "h")))
-        .distinct()
-        .groupBy("idx").agg(count(col("h")).as("n_distinct"))
-      pbase.join(pnd, Seq("idx"), "left")
-        .select(col("col_name"), col("n_rows"), col("n_null"),
-          coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-          col("min_str"), col("max_str"))
-        .write.format("noop").mode("overwrite").save()
-      // Residual r13 driver-sweep cold tail (all warm-fast, cold-slow;
-      // telemetry attributed each to jit/first-touch):
-      //  - q48 3.32 s cold vs 0.30 s warm: the UTF8_LCASE collation
-      //    comparison loads the CollationFactory + ICU comparator
-      //    classes on first use;
-      //  - q47 2.01 s cold: parse_json/variant_get load the VARIANT
-      //    binary codec + path-extraction classes;
-      //  - xd6 2.74 s cold vs 2.68 budget: the vocabulary-mask gate's
-      //    BroadcastNestedLoopJoin (theta condition over bit_count) is
-      //    the one join SHAPE nothing above loads, and the general arm
-      //    adds array_intersect/array_union kernel classes.
-      r.filter(expr("collate(r_name, 'UTF8_LCASE') = 'aSiA'"))
-        .groupBy("r_regionkey").agg(count(lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      r.select(expr(
-          """variant_get(parse_json(concat('{"k":', r_regionkey, ',"s":"x"}')),
-            |'$.k', 'int')""".stripMargin).as("k"))
-        .groupBy("k").agg(count(lit(1)).as("n"), sum("k").as("s"))
-        .write.format("noop").mode("overwrite").save()
-      val bnl = r.select(col("r_regionkey").as("mask_a"))
-      bnl.join(broadcast(r.select(col("r_regionkey").as("mask_b"))),
-          bit_count(col("mask_a").bitwiseAND(col("mask_b"))).cast("double") /
-            bit_count(col("mask_a").bitwiseOR(col("mask_b")) + 1) >= 0.5)
-        .select(round(col("mask_a").cast("double"), 4).as("j"))
-        .groupBy("j").count()
-        .write.format("noop").mode("overwrite").save()
-      r.select(
-          expr("size(array_intersect(split(r_name, ''), array('a','e')))").as("i"),
-          expr("size(array_union(split(r_name, ''), array('z')))").as("u"))
-        .groupBy("i", "u").count()
-        .write.format("noop").mode("overwrite").save()
-      // The term_counts/bigram_counts kernels + tf-table join shapes
-      // (xt3/xt5/xt6 — the r14 driver-sweep cold tail: warm 1.3-1.5 s
-      // but 3.1-5.1 s in bench/driver_last.json). The generic warm-up
-      // above loads the TOKENIZE kernel but not these two map-valued
-      // kernels' generated classes, nor the explode-of-map -> groupBy
-      // -> broadcast-join-back-to-tf fused stages all three queries
-      // compile, nor xt5's struct-array top-k sort:
-      // Volume matters here, not just shape: the byte-walk kernels run
-      // interpreted/C1 until the JIT sees enough iterations, and 50
-      // tiny rows never get them C2-compiled — the r14 driver sweep
-      // still read 3-5 s on these queries with every CLASS loaded but
-      // the hot loops uncompiled. ~3k rows x ~300 chars puts the
-      // kernels' inner loops over the OSR threshold during the
-      // (untimed) warm-up instead of inside the first timed query.
-      graft.functions.TextOps.register(spark)
-      val wbig = spark.range(3000).select(col("id"),
-        concat(expr("repeat('lorem ipsum dolor sit amet consectetur ', 8)"),
-          col("id").cast("string")).as("text"))
-      val wtf = wbig.select(col("id"),
-        explode(expr("term_counts(text)")).as(Seq("term", "tfi")))
-      val wdf = wtf.groupBy("term").agg(count(lit(1)).as("df"))
-      wtf.join(broadcast(wdf), Seq("term"))
-        .withColumn("w", col("tfi") * log(lit(50.0) / col("df")))
-        .groupBy("id")
-        .agg(expr("slice(array_sort(collect_list(struct(-w AS nw, " +
-          "term AS t))), 1, 3)").as("top"))
-        .select(col("id"), explode(col("top")).as("e"))
-        .groupBy("e").count()
-        .write.format("noop").mode("overwrite").save()
-      wbig.select(col("id"),
-          explode(expr("bigram_counts(text)")).as(Seq("g", "c")))
-        .groupBy("g").agg(sum(col("c")).as("cnt"))
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("cnt").desc, col("g"))))
-        .filter(col("rn") <= 3)
-        .write.format("noop").mode("overwrite").save()
-      // The LSH band pipeline END-TO-END in miniature (50 synthetic
-      // docs): tokenize -> sorted distinct set -> groupBy(set) ->
-      // signature kernel -> band explode (transform/sequence) -> band
-      // self-join -> hamming bit_count -> distinct -> localCheckpoint.
-      // The per-operator kernels are warmed above; what this adds is
-      // the WHOLE-STAGE CODEGEN classes of the fused multi-operator
-      // stages xd1/xd2/xd2b/xd6 actually compile (each distinct fused
-      // stage is its own generated class — per-expression warm-ups
-      // don't touch them; xd2b still read ~4.9 s in a focused cold
-      // probe after every kernel below was warm).
-      val wsets = wdocs
-        .select(col("id"),
-          sort_array(array_distinct(graft.queries.Llm.tokens(spark, col("text"))))
-            .as("toks"))
-        .groupBy("toks")
-        .agg(sort_array(collect_list("id")).as("ids"))
-        .withColumn("gid", xxhash64(col("toks")))
-        .withColumn("sim", expr("simhash_md5_sig(toks, 60)"))
-        .localCheckpoint(true)
-      val wband = wsets.select(col("gid"), col("sim"),
-        explode(expr(
-          "transform(sequence(0, 3), b -> shiftright(sim, b * 15) % 32768 + b * 32768)"))
-          .as("band_key"))
-      wband.as("a").join(wband.as("b"), Seq("band_key"))
-        .filter(col("a.gid") < col("b.gid"))
-        .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
-          bit_count(expr("a.sim ^ b.sim")).as("hamming"))
-        .filter(col("hamming") <= 3)
-        .distinct()
-        .write.format("noop").mode("overwrite").save()
-      wsets.unpersist(false)
-    }
-    }
-    // Drain the compiler queue the warm-up just filled BEFORE any
-    // timed run: cold mode has no per-run relax(), so without this the
-    // first heavy queries execute while C2 burns tens of seconds of
-    // CPU on warm-up-triggered compiles (r14 cold sweep: 40 s of
-    // compiler time inside a 16 s three-query window). Bounded wait —
-    // poll the compilation-time bean until it stops advancing.
+    // Bounded wait for the background compiler to go quiet: polls the
+    // compilation-time bean until it stops advancing (at most 20 s).
+    // The ambient-interference guard below calls it before re-measuring
+    // a block that ran inside a compiler storm.
     def jitSettle(): Unit = {
       var settled = 0
       var lastJit = jitMs
@@ -421,8 +112,6 @@ object Bench {
         settled += 250
       }
     }
-    warmUp(spark)
-    jitSettle()
 
     // Page-cache priming: stream every input file once. The shared
     // host periodically drops the page cache, and a post-drop cold run
@@ -442,10 +131,8 @@ object Bench {
     // optional focus list for targeted tuning: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val headlineOnly = sys.env.get("SPARK_GRAFT_HEADLINE").contains("1")
     val selected = Registry.all
       .filter(q => only.forall(_.contains(q.name)))
-      .filter(q => !headlineOnly || q.headline)
     // fail fast, BEFORE any query runs: a short-id collision detected
     // only after the ~10-minute sf0.1 sweep would discard every timing
     val shortIds = selected.map(_.name.takeWhile(_ != '_'))
@@ -501,8 +188,6 @@ object Bench {
           s"(residue ${blkUsedMb}MB > ${restartMb}MB)")
         spark.stop()
         spark = buildSession()
-        warmUp(spark)
-        jitSettle()
       }
     }
     // Between-RUN residue drop (untimed, runs after each timed run of
@@ -544,56 +229,53 @@ object Bench {
     val resultsT = selected.map { q =>
       val (gc0, jit0) = (gcMs, jitMs)
       val t = try {
-        if (cold) once(q.name)
-        else {
-          once(q.name) // warm-up (codegen + page cache), discarded
-          relax()
-          def run1(): Double = {
-            val t = once(q.name)
-            relax() // untimed: once() already stopped the clock
-            t
-          }
-          // SPARK_GRAFT_RUNS=N widens the block to a median-of-N —
-          // the floor re-measure protocol (tools/floorcheck.py) uses
-          // 5 so a floor-query FAIL is retried with more noise
-          // rejection than the sweep's default 3
-          val nRuns = sys.env.get("SPARK_GRAFT_RUNS")
-            .map(_.toInt).getOrElse(3)
-          val mid = nRuns / 2
-          def block(): Seq[Double] =
-            Seq.fill(nRuns)(run1()).sorted
-          val jit0blk = jitMs
-          val r1 = block()
-          val jitBlk = jitMs - jit0blk
-          // Ambient-interference guard: a warm median over the 2.0 s
-          // budget floor is not the plan when EITHER (a) it disagrees
-          // with the same block's own best run by >2x — two of four
-          // consecutive runs of an identical physical plan on a warm
-          // JVM can only diverge like that from environment (host
-          // contention, cleaner backlog), or (b) the JIT compiled >3 s
-          // of code DURING the measured block — tiered compilation
-          // keeps burning cores for several runs after the discarded
-          // warm-up on codegen-heavy plans (q63's focused block showed
-          // 18 s of compiler time around a 2.1 s "median" that is
-          // 1.8 s once compilation settles). Reclaim, re-measure one
-          // full block, and record the better of the two medians.
-          // Neither trigger fires for a genuinely slow query (its min
-          // is slow too, and a settled block compiles ~nothing), and
-          // the single capped retry still reports a median of 3 — it
-          // cannot manufacture a good number, only recover the one
-          // the environment destroyed.
-          if (r1(mid) > 2.0 && (r1(mid) > 2 * r1(0) || jitBlk > 3000)) {
-            reclaim()
-            // don't re-measure INSIDE the same compiler storm: the r15
-            // sweeps caught xr15 at 17 s (warm 2.3 s) with 13 s of C2
-            // time in its window, and the immediate retry re-measured
-            // the storm, not the query — wait for the compiler to go
-            // quiescent (bounded) before the second block
-            jitSettle()
-            val r2 = block()
-            math.min(r1(mid), r2(mid))
-          } else r1(mid)
+        once(q.name) // warm-up (codegen + page cache), discarded
+        relax()
+        def run1(): Double = {
+          val t = once(q.name)
+          relax() // untimed: once() already stopped the clock
+          t
         }
+        // SPARK_GRAFT_RUNS=N widens the block to a median-of-N —
+        // the floor re-measure protocol (tools/floorcheck.py) uses
+        // 5 so a floor-query FAIL is retried with more noise
+        // rejection than the sweep's default 3
+        val nRuns = sys.env.get("SPARK_GRAFT_RUNS")
+          .map(_.toInt).getOrElse(3)
+        val mid = nRuns / 2
+        def block(): Seq[Double] =
+          Seq.fill(nRuns)(run1()).sorted
+        val jit0blk = jitMs
+        val r1 = block()
+        val jitBlk = jitMs - jit0blk
+        // Ambient-interference guard: a warm median over the 2.0 s
+        // budget floor is not the plan when EITHER (a) it disagrees
+        // with the same block's own best run by >2x — two of four
+        // consecutive runs of an identical physical plan on a warm
+        // JVM can only diverge like that from environment (host
+        // contention, cleaner backlog), or (b) the JIT compiled >3 s
+        // of code DURING the measured block — tiered compilation
+        // keeps burning cores for several runs after the discarded
+        // warm-up on codegen-heavy plans (q63's focused block showed
+        // 18 s of compiler time around a 2.1 s "median" that is
+        // 1.8 s once compilation settles). Reclaim, re-measure one
+        // full block, and record the better of the two medians.
+        // Neither trigger fires for a genuinely slow query (its min
+        // is slow too, and a settled block compiles ~nothing), and
+        // the single capped retry still reports a median of 3 — it
+        // cannot manufacture a good number, only recover the one
+        // the environment destroyed.
+        if (r1(mid) > 2.0 && (r1(mid) > 2 * r1(0) || jitBlk > 3000)) {
+          reclaim()
+          // don't re-measure INSIDE the same compiler storm: the r15
+          // sweeps caught xr15 at 17 s (warm 2.3 s) with 13 s of C2
+          // time in its window, and the immediate retry re-measured
+          // the storm, not the query — wait for the compiler to go
+          // quiescent (bounded) before the second block
+          jitSettle()
+          val r2 = block()
+          math.min(r1(mid), r2(mid))
+        } else r1(mid)
       } catch { case _: Throwable => -1.0 }
       // block-store sample BEFORE the reclaim below — it shows what
       // this query accumulated, which is the eviction-pressure signal
@@ -699,16 +381,13 @@ object Bench {
       mkLine(shortLine(1, 1.0), None))
       .find(_.length <= 1925)
       .getOrElse(mkLine(shortLine(0, 0.0), None))
-    // full-registry runs only: a focused SPARK_GRAFT_ONLY/HEADLINE run
+    // full-registry runs only: a focused SPARK_GRAFT_ONLY run
     // must not clobber the complete map tools/results.py reads
     if (selected.size == Registry.all.size) try {
       val full =
         f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$fullQs,$telSummary,"telemetry":$fullTelem,"sf":"$sfDir"}"""
-      // cold sweeps get their own file — a warm+cold pipeline would
-      // otherwise have the second run clobber the first's full map
-      val dest = if (cold) "bench/driver_cold.json" else "bench/driver_last.json"
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(dest),
+        java.nio.file.Paths.get("bench/driver_last.json"),
         (full + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // reporting must not fail the bench
     // post-sweep: if compiled code nearly filled the reservation, the

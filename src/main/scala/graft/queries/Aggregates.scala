@@ -54,8 +54,7 @@ object Aggregates {
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02'
         |GROUP BY l_returnflag, l_linestatus""".stripMargin +
         orderAll("l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
-          "sum_disc", "sum_charge", "avg_qty", "avg_price", "avg_disc", "count_order")),
-    headline = true)
+          "sum_disc", "sum_charge", "avg_qty", "avg_price", "avg_disc", "count_order")))
 
   val q04 = GQuery(
     "q04_count_distinct",
@@ -73,8 +72,7 @@ object Aggregates {
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS nd_part,
         |  COUNT(DISTINCT l_suppkey) AS nd_supp, COUNT(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag""".stripMargin +
-        orderAll("l_returnflag", "nd_part", "nd_supp", "n_rows")),
-    headline = true)
+        orderAll("l_returnflag", "nd_part", "nd_supp", "n_rows")))
 
   // ⊘ approx sketch: not hash-matchable, but driver-certified by
   // xr10_hll_cert (max rel err vs exact q04 ≤ 0.15) on every gate run.
@@ -252,8 +250,7 @@ object Aggregates {
         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_prio
         |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin +
         orderAll("o_orderstatus", "o_orderpriority", "n_orders", "total_price",
-          "g_status", "g_prio")),
-    headline = true)
+          "g_status", "g_prio")))
 
   val q05b = GQuery(
     "q05b_cube",

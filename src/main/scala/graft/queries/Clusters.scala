@@ -79,9 +79,6 @@ object Clusters {
     val cap = if (bcThreshold > 0) math.min(bcThreshold / 32L, 4000000L).toInt else 0
     if (cap <= 0) return None
     val head = eps.limit(cap + 1).collect()
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"[components] edge-probe=${head.length} cap=$cap " +
-        s"fastPath=${head.length <= cap}")
     if (head.length > cap) None
     else Some(unionFind(head.map(r => (r.getLong(0), r.getLong(1)))))
   }
@@ -278,9 +275,6 @@ object Clusters {
       round += 1
     }
     assert(converged, s"label propagation did not converge in $MaxRounds rounds")
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"[components] converged in $round rounds" +
-        s" (classes=$mCnt)")
     lbl
   }
 

@@ -55,8 +55,7 @@ object EventOps {
         |  event_type, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2, 3""".stripMargin +
-        orderAll("window_start", "window_end", "event_type", "n_events", "sum_value")),
-    headline = true)
+        orderAll("window_start", "window_end", "event_type", "n_events", "sum_value")))
 
   // Sliding windows (1 h size, 30 min slide): each event belongs to the
   // two windows starting at floor30(ts) and floor30(ts)-30min. The oracle

@@ -29,8 +29,7 @@ object Joins {
       """SELECT r_name, COUNT(*) AS n_customers
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin + orderAll("r_name", "n_customers")),
-    headline = true)
+        |GROUP BY r_name""".stripMargin + orderAll("r_name", "n_customers")))
 
   // TPC-H Q3 shape: multi-way join + aggregate + top-k by measure.
   val q07 = GQuery(
@@ -63,8 +62,7 @@ object Joins {
         |    AND l_shipdate > TIMESTAMP '1998-06-01'
         |  GROUP BY 1, 2, 3
         |  ORDER BY revenue DESC, l_orderkey LIMIT 10)""".stripMargin +
-        orderAll("l_orderkey", "o_orderdate", "o_orderpriority", "revenue")),
-    headline = true)
+        orderAll("l_orderkey", "o_orderdate", "o_orderpriority", "revenue")))
 
   // TPC-H Q13 shape: left outer join + two-level aggregation.
   val q08 = GQuery(
@@ -84,8 +82,7 @@ object Joins {
         |  FROM customer LEFT OUTER JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey) GROUP BY c_count""".stripMargin +
-        orderAll("c_count", "custdist")),
-    headline = true)
+        orderAll("c_count", "custdist")))
 
   /** Full outer join — the one outer-join shape Q08 doesn't cover.
     * Year-over-year customer reconciliation: per-customer order count

@@ -159,8 +159,7 @@ object Llm {
         |  ROUND(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
         |FROM pr JOIN sz sa ON pr.da = sa.doc_id JOIN sz sb ON pr.db = sb.doc_id
         |WHERE inter / (sa.sz + sb.sz - inter) >= 0.8""".stripMargin +
-        orderAll("doc_a", "doc_b")),
-    headline = true)
+        orderAll("doc_a", "doc_b")))
 
   /** Exact cosine top-5 neighbors per vector (brute force). Norms are
     * computed once per vector BEFORE the self-join; the pairwise stage
@@ -215,8 +214,7 @@ object Llm {
         |        row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, neighbor_id ASC) AS rn
         |      FROM p)
         |SELECT vec_id, neighbor_id, score + 0.0 AS score FROM r WHERE rn <= 5""".stripMargin +
-        orderAll("vec_id", "neighbor_id", "score")),
-    headline = true)
+        orderAll("vec_id", "neighbor_id", "score")))
 
   /** Text analysis per language: counts, char/token statistics, dominant
     * source (deterministic tie-break by source name).

@@ -80,8 +80,7 @@ object Pipeline {
         |  LEFT JOIN qc ON r.lang = qc.lang
         |  LEFT JOIN kc ON r.lang = kc.lang)
         |SELECT * FROM rpt""".stripMargin +
-        orderAll("lang", "n_raw", "n_quality", "n_kept", "total_tokens", "avg_tokens")),
-    headline = true)
+        orderAll("lang", "n_raw", "n_quality", "n_kept", "total_tokens", "avg_tokens")))
 
   /** xp2: the FULL curation pipeline — every curation-family operator
     * composed the way a production training-data run chains them, with
@@ -261,8 +260,7 @@ object Pipeline {
         |LEFT JOIN kc ON r.lang = kc.lang
         |LEFT JOIN fc ON r.lang = fc.lang""".stripMargin +
         orderAll("lang", "n_raw", "n_quality", "n_clean", "n_kept",
-          "n_final", "total_tokens")),
-    headline = true)
+          "n_final", "total_tokens")))
 
   def queries: Seq[GQuery] = Seq(xp1, xp2)
 }

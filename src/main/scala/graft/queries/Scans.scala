@@ -25,8 +25,7 @@ object Scans {
     },
     Some(
       "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem" +
-        orderAll("l_orderkey", "l_linenumber", "l_extendedprice")),
-    headline = true)
+        orderAll("l_orderkey", "l_linenumber", "l_extendedprice")))
 
   // TPC-H Q6 shape: filter + single global aggregate.
   val q02 = GQuery(
@@ -48,8 +47,7 @@ object Scans {
       """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(38,6)) AS DOUBLE) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
-    headline = true)
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin))
 
   // Global sort + limit: Catalyst plans TakeOrderedAndProject (no full sort).
   val q18 = GQuery(
@@ -69,8 +67,7 @@ object Scans {
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM
         |(SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
         | ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 20)""".stripMargin +
-        orderAll("l_orderkey", "l_linenumber", "l_extendedprice")),
-    headline = true)
+        orderAll("l_orderkey", "l_linenumber", "l_extendedprice")))
 
   /** Order-insensitive per-slice table fingerprint (TableCheck): the
     * lake-reconciliation primitive — prove two table versions hold the

@@ -35,8 +35,7 @@ object Windows {
         |  FROM orders
         |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC))
         |WHERE rn <= 3""".stripMargin +
-        orderAll("o_orderkey")),
-    headline = true)
+        orderAll("o_orderkey")))
 
   val q15 = GQuery(
     "q15_lag_lead",
@@ -60,8 +59,7 @@ object Windows {
         |  value - lag(value, 1) OVER w AS delta
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)""".stripMargin +
-        orderAll("event_id")),
-    headline = true)
+        orderAll("event_id")))
 
   // Frames: running total (UNBOUNDED PRECEDING) + 3-row moving average.
   // The moving average is emitted as exact-decimal frame sum -> double,

@@ -10,14 +10,11 @@ import org.apache.spark.sql.types._
   * @param fn      (spark, sfDir) => result DataFrame (canonically ordered)
   * @param oracle  equivalent DuckDB SQL over the same parquet tables;
   *                None => driver records a weaker rows-only check
-  * @param headline flagship marker: included in Bench's
-  *                 SPARK_GRAFT_HEADLINE=1 focused mode
   */
 final case class GQuery(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    headline: Boolean = false)
+    oracle: Option[String])
 
 /** Per-invocation context: table accessors over the given sf directory. */
 final case class Ctx(spark: SparkSession, dir: String) {

@@ -1,25 +1,23 @@
 #!/usr/bin/env python3
 """Generate bench/RESULTS.md per BASELINE.md §2.5: query | duckdb | spark
-warm | spark cold | ratio | pass/fail. Inputs: spark bench JSON line
-(warm median protocol), duckdb timings JSON, optionally a cold-mode
-spark JSON (SPARK_GRAFT_BENCH_MODE=cold — mirrors the driver's
-single-pass measurement) and the EtlDemo pipeline-baseline JSON.
+warm | ratio | pass/fail. Inputs: spark bench JSON line (warm median
+protocol), duckdb timings JSON and, optionally, the EtlDemo
+pipeline-baseline JSON.
 
 A FAIL whose binding budget is the 2.0s FLOOR is adjudicated by the
 floor re-measure protocol: tools/floorcheck.py re-runs those queries
 focused (median of 5, fresh JVM) into floor_json; a re-measure under
 budget records the row as PASS with both numbers shown.
 
-Usage: tools/results.py [spark_json] [duckdb_json] [out_md] [cold_json] [etl_json] [floor_json]
+Usage: tools/results.py [spark_json] [duckdb_json] [out_md] [etl_json] [floor_json]
 """
 import json, os, sys
 
 spark_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/bench_sf01.json"
 duck_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/duckdb_bench.json"
 out_path = sys.argv[3] if len(sys.argv) > 3 else "bench/RESULTS.md"
-cold_path = sys.argv[4] if len(sys.argv) > 4 else "/tmp/bench_cold.json"
-etl_path = sys.argv[5] if len(sys.argv) > 5 else "bench/etl_last.json"
-floor_path = sys.argv[6] if len(sys.argv) > 6 else "/tmp/bench_floor.json"
+etl_path = sys.argv[4] if len(sys.argv) > 4 else "bench/etl_last.json"
+floor_path = sys.argv[5] if len(sys.argv) > 5 else "/tmp/bench_floor.json"
 
 
 def load_line(path):
@@ -34,9 +32,6 @@ def load_line(path):
 
 spark = load_line(spark_path)
 duck = json.load(open(duck_path))
-cold_doc = load_line(cold_path) if os.path.exists(cold_path) else {}
-cold = cold_doc.get("queries", {})
-cold_tel = cold_doc.get("telemetry", {})
 etl = load_line(etl_path) if os.path.exists(etl_path) else None
 
 floor = {}
@@ -44,19 +39,15 @@ if os.path.exists(floor_path):
     floor = json.load(open(floor_path)).get("queries", {})
 
 rows = []
-cold_risks = []
 floor_pending = []
 for name in sorted(spark["queries"]):
     s = spark["queries"][name]
-    c = cold.get(name)
     d = duck.get(name)
     if d is None or d <= 0:
-        rows.append((name, None, s, c, None, "⊘ no oracle"))
+        rows.append((name, None, s, None, "⊘ no oracle"))
         continue
     budget = max(2 * d, 2.0)
     ok = 0 <= s <= budget
-    if c is not None and c > budget:
-        cold_risks.append((name, c, budget))
     verdict = "PASS" if ok else f"FAIL (budget {budget:.2f}s)"
     if not ok and budget == 2.0:
         # floor re-measure protocol: the 2.0s floor is noise-bound on
@@ -71,28 +62,25 @@ for name in sorted(spark["queries"]):
         else:
             floor_pending.append(name)
             verdict = "FAIL (budget 2.00s) — floor: run tools/floorcheck.py"
-    rows.append((name, d, s, c, s / d if d else None, verdict))
+    rows.append((name, d, s, s / d if d else None, verdict))
 
-n_pass = sum(1 for r in rows if r[5].startswith("PASS"))
-n_fail = sum(1 for r in rows if r[5].startswith("FAIL"))
+n_pass = sum(1 for r in rows if r[4].startswith("PASS"))
+n_fail = sum(1 for r in rows if r[4].startswith("FAIL"))
 with open(out_path, "w") as f:
     f.write("# Bench results — sf0.1 (BASELINE.md §2 protocol)\n\n")
     f.write(f"Spark warm: median of 3 timed runs after 1 warm-up, noop sink, "
-            f"`local[32]`, AQE on. Spark cold: ONE timed run per query in a "
-            f"fresh JVM sweep (generic engine warm-up only) — the driver's "
-            f"measurement shape, recorded so cold-only budget breaches "
-            f"surface before the driver runs. DuckDB: same queries, same "
+            f"`local[32]`, AQE on. DuckDB: same queries, same "
             f"parquet, median of 3 (known-slow oracles timed once — see "
             f"duckbench.py ONCE; xd9's unbounded-DP levenshtein dominates "
             f"the duckdb total). Pass: spark warm <= max(2x duckdb, 2.0s); "
             f"a FAIL bound by the 2.0s floor is adjudicated by a focused "
             f"median-of-5 re-measure (tools/floorcheck.py), both numbers "
             f"recorded.\n\n")
-    budgeted_s = sum(r[2] for r in rows if not r[5].startswith("⊘"))
+    budgeted_s = sum(r[2] for r in rows if not r[4].startswith("⊘"))
     budgeted_d = sum(r[1] for r in rows if r[1] is not None)
-    unbudgeted_s = sum(r[2] for r in rows if r[5].startswith("⊘"))
+    unbudgeted_s = sum(r[2] for r in rows if r[4].startswith("⊘"))
     f.write(f"**{n_pass} pass, {n_fail} fail** "
-            f"(+{sum(1 for r in rows if r[5].startswith('⊘'))} no-oracle "
+            f"(+{sum(1 for r in rows if r[4].startswith('⊘'))} no-oracle "
             f"sketch queries, timed but unbudgeted). "
             f"Spark total {spark['value']:.1f}s = {budgeted_s:.1f}s budgeted "
             f"(duckdb {budgeted_d:.1f}s) + {unbudgeted_s:.1f}s unbudgeted "
@@ -146,26 +134,6 @@ with open(out_path, "w") as f:
                 f"{len(overhead)}): **{med:.2f}s**"
                 + (f" (prev {hist[-2]['median']:.2f}s)" if len(hist) > 1
                    else "") + f".{warn}\n\n")
-    if cold:
-        if cold_risks:
-            def attr(n):
-                t = cold_tel.get(n)
-                if not t:
-                    return ""
-                # attribution from the bench telemetry: a breach with
-                # ~zero GC+JIT delta is host weather / real data cost;
-                # a large jit delta is this query's own codegen compile
-                return (f"; gc {t['gcMs'] / 1000:.1f}s"
-                        f" jit {t['jitMs'] / 1000:.1f}s")
-            f.write("Cold-run budget risks (cold > warm budget; verdicts "
-                    "stay warm-based per protocol; per-row gc/jit deltas "
-                    "from the cold sweep's telemetry attribute each "
-                    "breach): "
-                    + ", ".join(f"{n} ({c:.2f}s vs {b:.2f}s{attr(n)})"
-                                for n, c, b in cold_risks) + ".\n\n")
-        else:
-            f.write("Cold sweep: every budgeted query under its budget "
-                    "cold as well.\n\n")
     if etl is not None:
         verdict = "PASS" if etl.get("pass") else "FAIL"
         f.write(f"**Pipeline-layer baseline** (BASELINE.md §2, reference "
@@ -173,14 +141,12 @@ with open(out_path, "w") as f:
                 f"end-to-end (scan → enrich → enforce → append → cursor "
                 f"commit) = {etl['value']:.2f}s vs {etl['budget']:.0f}s "
                 f"budget → {verdict} (graft.etl.EtlDemo).\n\n")
-    f.write("| query | duckdb s | spark warm s | spark cold s | ratio | verdict |\n")
-    f.write("|---|---|---|---|---|---|\n")
-    for name, d, s, c, r, v in rows:
+    f.write("| query | duckdb s | spark warm s | ratio | verdict |\n")
+    f.write("|---|---|---|---|---|\n")
+    for name, d, s, r, v in rows:
         f.write(f"| {name} | {d if d is not None else '—'} | {s:.3f} | "
-                f"{f'{c:.3f}' if c is not None else '—'} | "
                 f"{f'{r:.2f}x' if r else '—'} | {v} |\n")
-print(f"wrote {out_path}: {n_pass} pass, {n_fail} fail, "
-      f"{len(cold_risks)} cold risks")
+print(f"wrote {out_path}: {n_pass} pass, {n_fail} fail")
 if floor_pending:
     print("floor FAILs pending re-measure (run tools/floorcheck.py, then "
           "re-run results.py): " + ", ".join(floor_pending))
