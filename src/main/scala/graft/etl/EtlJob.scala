@@ -9,7 +9,9 @@ import org.apache.spark.sql.expressions.Window
   * once into staging files that each load then reads (main.py:153-185),
   * a cycle extracts once and loads four times:
   *
-  *   scan(range) -> filter(contract events) -> enrich(ipfs) -> persist
+  *   scan(range: one split per batch, each reading only the chain
+  *        file's spans that hold its blocks)
+  *     -> filter(contract events) -> enrich(ipfs) -> persist
   *     -> materialize (one count; 0 rows skips every load)
   *     -> four concurrent loads, one thread per sink (valid + reject
   *        channel per table), each: parse/flatten -> [explode products]

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** DSv2 chain micro-batch source: confirmation lag, batch splitting,
-  * checkpointed restart-resume (the streaming form of the etl_cursor).
+  * checkpointed restart-resume (the streaming form of the etl_cursor),
+  * rows equal to the JSON-source oracle (`ChainOracle`).
   */
 class ChainStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -71,10 +72,13 @@ class ChainStreamSpec extends AnyFunSuite {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(root.resolve("s2").toString)
-    val batch = new ChainSource(spark, chain.toString)
-      .scan(ChainFixture.Epoch, head - 4)
-    assert(streamed.count() == batch.count())
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+    // the batch scan reads through the same reader, so both compare to
+    // the JSON-source oracle
+    val oracle = ChainOracle(spark, chain.toString, ChainFixture.Epoch, head - 4)
+    val batch = new ChainSource(spark, chain.toString).scan(ChainFixture.Epoch, head - 4)
+    assert(streamed.count() == oracle.count())
+    assert(streamed.exceptAll(oracle).isEmpty && oracle.exceptAll(streamed).isEmpty)
+    assert(batch.exceptAll(oracle).isEmpty && oracle.exceptAll(batch).isEmpty)
   }
 
   test("batch and streaming readers agree on escaped payloads (newline, backslash, quote)") {
@@ -94,13 +98,25 @@ class ChainStreamSpec extends AnyFunSuite {
     val line =
       s"""{"block_number": $b, "log_index": 0, "address": "${EtlJob.MarketplaceAddr}", "topic0": "${EtlJob.MarketplaceTopic}", "payload": "${jesc(raw)}"}"""
     Files.write(chain.resolve("blocks.ndjson"), (line + "\n").getBytes("UTF-8"))
-    val rdr = new ChainPartitionReader(BlockRangePartition(b, b, chain.toString))
+    val split = new ChainMicroBatchStream(chain.toString, b, 4L, 1000L)
+      .planInputPartitions(BlockOffset(b - 1), BlockOffset(b)).head
+    val rdr = ChainReaderFactory.createReader(split)
     assert(rdr.next())
     val viaStream = rdr.get().getUTF8String(4).toString
     rdr.close()
     val viaBatch = new ChainSource(spark, chain.toString)
       .scan(b, b).select("payload").head.getString(0)
+    val viaOracle = ChainOracle(spark, chain.toString, b, b).select("payload").head.getString(0)
+    assert(viaOracle == raw)
     assert(viaStream == raw)
     assert(viaBatch == raw)
+  }
+
+  test("a malformed head fails the stream's head probe") {
+    val chain = Files.createTempDirectory("chainhead").resolve("chain")
+    ChainFixture.write(chain)
+    Files.write(chain.resolve("head.json"), "{}".getBytes("UTF-8"))
+    val stream = new ChainMicroBatchStream(chain.toString, ChainFixture.Epoch, 4L, 1000L)
+    intercept[IllegalStateException](stream.latestOffset())
   }
 }

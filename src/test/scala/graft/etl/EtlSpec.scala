@@ -183,6 +183,14 @@ class EtlSpec extends AnyFunSuite {
     assert(df.rdd.getNumPartitions == 3) // ceil(2496/1000)
   }
 
+  test("one cycle's Spark jobs are pinned") {
+    val (_, cfg) = freshDirs()
+    val (stats, jobs) = SparkTestSession.jobsIn(EtlJob.runCycle(spark, cfg))
+    assert(stats.ran && stats.marketplaceRows > 0)
+    // 12 while the scan read the JSON source and range-shuffled the rows
+    assert(jobs == 10)
+  }
+
   test("loop counts errors and leaves cursor unmoved on failure") {
     val (root, cfg) = freshDirs()
     val broken = cfg.copy(chainDir = root.resolve("nope").toString)
