@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Benchmark main — BASELINE.md §2 protocol: per query, one discarded
@@ -13,37 +12,22 @@ import graft.queries.Registry
   *
   * Options (env):
   *  - SPARK_GRAFT_SF_DIR: fixture directory (default sf0.1).
-  *  - SPARK_GRAFT_CPUS=N: `local[N]` and N shuffle partitions.
-  *  - SPARK_GRAFT_CONF=k=v[,k=v]: session-conf overrides.
-  *  - SPARK_GRAFT_ONLY=q1,q2: focus list for targeted tuning.
+  *  - SPARK_GRAFT_CPUS, SPARK_GRAFT_CONF: the session (`Graft.localSession`).
+  *  - SPARK_GRAFT_ONLY=q1,q2: focus list for targeted tuning, full names
+  *    or short ids (`Registry.select`).
   *  - SPARK_GRAFT_RUNS=N: median of N timed runs instead of 3.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      // SPARK_GRAFT_CONF=k=v[,k=v] — session-conf overrides for focused
-      // measurement runs (e.g. spark.sql.adaptive.enabled=false or
-      // spark.sql.autoBroadcastJoinThreshold=-1 to time a query with
-      // AQE or broadcast joins off)
-      sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty)
-        .foreach { kv =>
-          val i = kv.indexOf('=')
-          require(i > 0, s"bad SPARK_GRAFT_CONF entry: $kv")
-          s.conf.set(kv.take(i), kv.drop(i + 1))
-        })
-      s
-    }
-    var spark = buildSession()
+    // fail fast, BEFORE any query runs: an unmatched focus entry or a
+    // short-id collision detected only after the ~10-minute sf0.1 sweep
+    // would discard every timing
+    val selected = Registry.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val shortIds = selected.map(q => Registry.shortId(q.name))
+    require(shortIds.distinct.size == shortIds.size,
+      s"short query ids collide: ${shortIds.diff(shortIds.distinct).distinct}")
+    var spark = Graft.localSession()
 
     // JIT code-cache headroom guard. A full sweep compiles one or more
     // whole-stage-codegen classes PER QUERY into one JVM; at 155
@@ -128,16 +112,6 @@ object Bench {
         try while (in.read(buf) >= 0) () finally in.close()
       }
 
-    // optional focus list for targeted tuning: SPARK_GRAFT_ONLY=q1,q2
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = Registry.all
-      .filter(q => only.forall(_.contains(q.name)))
-    // fail fast, BEFORE any query runs: a short-id collision detected
-    // only after the ~10-minute sf0.1 sweep would discard every timing
-    val shortIds = selected.map(_.name.takeWhile(_ != '_'))
-    require(shortIds.distinct.size == shortIds.size,
-      s"short query ids collide: ${shortIds.diff(shortIds.distinct).distinct}")
     // Inter-query block-store reclamation. clearCache/unpersist alone
     // proved insufficient in the r12 driver sweep: broadcast-join
     // blocks (a fresh broadcast per timed run — 4 per broadcasting
@@ -187,7 +161,7 @@ object Bench {
         System.err.println(s"[bench] session restart #$restarts " +
           s"(residue ${blkUsedMb}MB > ${restartMb}MB)")
         spark.stop()
-        spark = buildSession()
+        spark = Graft.localSession()
       }
     }
     // Between-RUN residue drop (untimed, runs after each timed run of
@@ -332,7 +306,7 @@ object Bench {
     }
     def shortLine(dec: Int, intAbove: Double): String = results
       .map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + fmtSecs(v, dec, intAbove) }
+        "\"" + Registry.shortId(k) + "\":" + fmtSecs(v, dec, intAbove) }
       .mkString("{", ",", "}")
     // Sweep-level telemetry rides the stdout line (compact — short
     // keys, ~60 chars); the PER-QUERY breakdown goes in the sidecar

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Plan inspector: prints the formatted physical plan for the given
   * queries (default: a representative set), for verifying pushdown,
   * broadcast choices, and WholeStageCodegen coverage.
   *
-  * Usage: runMain graft.Explain [sfDir] [query names...]
+  * Usage: runMain graft.Explain [sfDir] [query names...] (env: `Graft.localSession`)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -21,13 +20,7 @@ object Explain {
         "xt6_lm_score", "xd7_semantic_dedup", "xi1_incremental_agg",
         "xd9_edit_distance", "xi2_incremental_quantiles", "xt8_top_terms_sketch",
         "q08b_full_outer", "q40_sql_tpch5")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.localSession()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       Registry.byName(n).fn(spark, sfDir).explain("formatted")

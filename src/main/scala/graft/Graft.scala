@@ -25,6 +25,9 @@ import org.apache.spark.sql.SparkSession
   * session is built — init cannot retrofit them, so it warns-by-doc
   * rather than silently half-installing.
   *
+  * `localSession` is the one session builder of every main and the
+  * test session.
+  *
   * Everything else is plain API: `queries.Registry` (the full
   * declared query surface — DocSyncSpec pins the count), `etl.*`
   * (the pipeline layer and the Snapshot lake), `operators.*`
@@ -43,5 +46,37 @@ object Graft {
     functions.Md5Hash60.register(spark)
     functions.SimHashSig.register(spark)
     functions.SimHashMd5Sig.register(spark)
+  }
+
+  /** The local session of every main and the test session: `local[n]`
+    * and n shuffle partitions (n = SPARK_GRAFT_CPUS, else the available
+    * processors), UTC, no UI, `GraftExtensions`, and three confs the
+    * engine would otherwise set mid-session (`Ctx.events`' nanosAsLong,
+    * `Snapshot`'s field-id reads and TIMESTAMP_MICROS writes), so no
+    * query changes them. Then `conf` (master, warehouse, catalog paths)
+    * and SPARK_GRAFT_CONF=k=v[,k=v], at build time so static confs work.
+    */
+  def localSession(conf: (String, String)*): SparkSession = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val env = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(","))
+      .filter(_.nonEmpty).map { kv =>
+        val i = kv.indexOf('=')
+        require(i > 0, s"bad SPARK_GRAFT_CONF entry: $kv")
+        kv.take(i) -> kv.drop(i + 1)
+      }
+    val spark = (Seq(
+      "spark.master" -> s"local[$n]",
+      "spark.sql.shuffle.partitions" -> n,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.fieldId.read.enabled" -> "true",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    ) ++ conf ++ env).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

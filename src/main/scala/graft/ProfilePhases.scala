@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Overhead diagnostic for the floor-bound bench class: split a warm
@@ -13,19 +11,12 @@ import graft.queries.Registry
   * verdicts; this names where the fixed cost lives.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt 'runMain graft.ProfilePhases q61_sql_tpch1,...'
+  * (+ SPARK_GRAFT_CPUS, SPARK_GRAFT_CONF: `Graft.localSession`)
   */
 object ProfilePhases {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.localSession()
     val names =
       if (args.nonEmpty) args(0).split(",").toSeq.filter(_.nonEmpty)
       else Seq("q61_sql_tpch1", "q63_sql_tpch9", "q64_sql_tpch11",

@@ -1,40 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.queries.Registry
+/** Driver-run correctness dump: each registry query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. Env:
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_CONF (`Graft.localSession`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated focus list for local
     // iteration — full names or the short ids Bench reports (q44, xv1)
-    val only = args.drop(2).headOption.map(_.split(",").map(_.trim).toSet)
-    def selectedBy(filter: Set[String], name: String): Boolean =
-      filter.contains(name) || filter.contains(name.takeWhile(_ != '_'))
-    only.foreach { f =>
-      // validate each entry, not the list as a whole — one valid id
-      // next to a typo'd one must not silently verify a subset
-      f.foreach { e =>
-        require(SparkEntry.queries.keys.exists(n => selectedBy(Set(e), n)),
-          s"focus entry matches no query: $e")
-      }
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Registry.select(args.drop(2).headOption)
+    // result files keep Spark's INT96 timestamps: DuckDB reads them as
+    // TIMESTAMP, as the oracles' CAST(ts AS TIMESTAMP) gives, but reads
+    // the builder's TIMESTAMP_MICROS (UTC-adjusted) as TIMESTAMPTZ
+    val spark = Graft.localSession(
+      "spark.sql.parquet.outputTimestampType" -> "INT96")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(selectedBy(_, name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // queries persist() multi-consumer subplans; release between
       // queries so a 65-query run doesn't accumulate cache entries;

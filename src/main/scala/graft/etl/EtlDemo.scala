@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.commons.io.FileUtils
 
 /** Runnable end-to-end demo of the pipeline layer, and the check for
   * BASELINE.md §2's pipeline criterion: one ~1000-block batch through
@@ -11,26 +12,24 @@ import java.nio.file.Files
   * replays the same range into a fresh sink and cursor once the demo's
   * other work has warmed the JVM, so it moves with the cycle itself.
   *
-  * Usage: runMain graft.etl.EtlDemo [workDir]
+  * Usage: runMain graft.etl.EtlDemo [workDir] (default: a temp dir it
+  * deletes on exit); env: SPARK_GRAFT_CPUS, SPARK_GRAFT_CONF.
   */
 object EtlDemo {
   def main(args: Array[String]): Unit = {
-    val root = if (args.nonEmpty) java.nio.file.Paths.get(args(0))
-      else Files.createTempDirectory("etl_demo")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the SQL front door: extensions route catalog reads/DML to the
-      // native manifest machinery; the catalog names the landed tables
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.graft.warehouse",
-        root.resolve("lake").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val given = args.headOption.map(Paths.get(_))
+    val root = given.getOrElse(Files.createTempDirectory("etl_demo"))
+    // a work dir the demo made is its own to delete; a given one stays
+    val ok = try run(root)
+      finally if (given.isEmpty) FileUtils.deleteDirectory(root.toFile)
+    if (!ok) sys.exit(1)
+  }
+
+  private def run(root: Path): Boolean = {
+    // the SQL front door: the catalog names the landed tables
+    val spark = graft.Graft.localSession(
+      "spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
+      "spark.sql.catalog.graft.warehouse" -> root.resolve("lake").toString)
 
     val chain = root.resolve("chain")
     ChainFixture.write(chain, headBlock = ChainFixture.Epoch + 1003) // 1000 confirmed
@@ -127,13 +126,12 @@ object EtlDemo {
     println(s"[etl-demo] PASS=$ok")
     // record the pipeline-layer baseline row (BASELINE.md §2: one
     // 1,000-block cycle <= 15 s) where tools/results.py picks it up
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench/etl_last.json"),
+    try Files.write(Paths.get("bench/etl_last.json"),
       (f"""{"metric":"etl_cycle_1000_blocks","value":$sec%.3f,""" +
         f""""warm_value":$warmSec%.3f,"unit":"sec","budget":15.0,"pass":$ok}""" +
         "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // reporting must not fail the demo
     spark.stop()
-    if (!ok) sys.exit(1)
+    ok
   }
 }

@@ -15,4 +15,22 @@ object Registry {
       Curation.queries ++ Sql.queries ++ Recall.queries
 
   def byName: Map[String, GQuery] = all.map(q => q.name -> q).toMap
+
+  /** The unique prefix before the first '_' (q44, xv1): Bench's id. */
+  def shortId(name: String): String = name.takeWhile(_ != '_')
+
+  /** The queries a comma-separated focus list names (Bench's
+    * SPARK_GRAFT_ONLY, Verify's third argument); no list selects all.
+    * Each entry is a full name or a short id and must match a query, so
+    * a typo next to a valid entry fails instead of selecting a subset.
+    */
+  def select(only: Option[String]): Seq[GQuery] = only.fold(all) { list =>
+    val entries = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    def hit(e: String, q: GQuery) = q.name == e || shortId(q.name) == e
+    val unmatched = entries.filterNot(e => all.exists(hit(e, _)))
+    require(entries.nonEmpty && unmatched.isEmpty,
+      s"focus list '$list' has entries that match no query: " +
+        unmatched.toSeq.sorted.mkString(","))
+    all.filter(q => entries.exists(hit(_, q)))
+  }
 }

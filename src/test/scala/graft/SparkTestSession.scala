@@ -3,18 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared local session for specs (one JVM-wide session; Spark reuses
-  * it across suites via getOrCreate).
+  * it across suites via getOrCreate). `local[4]` and 4 shuffle
+  * partitions are fixed here, not taken from the host, so the job and
+  * partition counts that specs pin do not depend on it.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The pairs every spec session is built with. */
+  val pinned: Seq[(String, String)] = Seq(
+    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4")
+
+  lazy val spark: SparkSession = Graft.localSession(pinned ++ Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString): _*)
 
   /** `f`'s result and the number of Spark jobs it submitted. Jobs are
     * counted by a job group set on this thread, so another thread's

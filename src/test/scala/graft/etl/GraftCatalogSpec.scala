@@ -18,21 +18,15 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   private val wh = Files.createTempDirectory("graftcat").toString
 
-  // extensions + catalog session (ExtensionsSpec's two-session dance:
-  // the shared context is materialized first, then a fresh session
-  // with the extensions and the catalog registered)
+  // catalog session: the shared context is materialized first, then a
+  // fresh session with the catalog registered
   private lazy val spark: SparkSession = {
     graft.SparkTestSession.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.graft.warehouse", wh)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = graft.Graft.localSession(graft.SparkTestSession.pinned ++ Seq(
+      "spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
+      "spark.sql.catalog.graft.warehouse" -> wh): _*)
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     s
   }

@@ -24,14 +24,9 @@ class MetaCountSpec extends AnyFunSuite {
     graft.SparkTestSession.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.graft.warehouse", wh)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = graft.Graft.localSession(graft.SparkTestSession.pinned ++ Seq(
+      "spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
+      "spark.sql.catalog.graft.warehouse" -> wh): _*)
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     s
   }

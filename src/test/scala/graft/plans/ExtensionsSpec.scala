@@ -10,20 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  // Extensions bind at session build time, so this suite needs its own
-  // SparkSession (same SparkContext): clear the active/default session
-  // and getOrCreate builds a fresh one with the extensions applied.
-  private lazy val spark: SparkSession = {
-    graft.SparkTestSession.spark // materialize the shared context first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  // the shared session is built with the extensions installed
+  private lazy val spark: SparkSession = graft.SparkTestSession.spark
 
   test("optimizer rewrites aggregate(zip_with(*)) into VectorDot") {
     val df = spark.read

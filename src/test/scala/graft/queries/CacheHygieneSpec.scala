@@ -46,17 +46,26 @@ class CacheHygieneSpec extends AnyFunSuite {
     * localCheckpoint each reap leaves for its own result — which a
     * caller releases by dropping the frame, and which this test
     * releases explicitly to prove the block store drains to zero.
+    * No query may change the session conf either. The sweep runs in a
+    * new session, which starts from the builder's conf whatever
+    * earlier suites did to the shared one.
     */
   test("full registry sweep: no cached plans; block store drains to empty") {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     val before = spark.sparkContext.getPersistentRDDs.size
+    val session = spark.newSession()
     for (q <- Registry.all) {
-      val out = q.fn(spark, sf)
+      val conf = session.conf.getAll.toSet
+      val out = q.fn(session, sf)
       out.count()
       assert(spark.sharedState.cacheManager.isEmpty,
         s"${q.name} leaked a catalog-cached plan into the session")
+      val now = session.conf.getAll.toSet
+      assert((now diff conf).isEmpty && (conf diff now).isEmpty,
+        s"${q.name} changed the session conf to ${now diff conf} " +
+          s"from ${conf diff now}")
     }
     // only reap's per-result checkpoints may remain — bounded by the
     // number of queries run, never data- or iteration-unbounded
